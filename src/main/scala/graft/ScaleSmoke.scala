@@ -191,7 +191,7 @@ object ScaleSmoke {
         keys = Seq("l_returnflag", "l_linestatus"),
         measures = Seq("l_quantity", "l_extendedprice"))
       import org.apache.spark.sql.functions.{count => cnt, _}
-      spark.read.parquet(s"$dir/lineitem.parquet")
+      Tables.lineitem(spark, dir)
         .groupBy(col("l_returnflag"))
         .agg(sum(col("l_quantity")).as("s"), cnt(lit(1)).as("n"))
     }
@@ -608,7 +608,7 @@ object ScaleSmoke {
       cat.createNamespace("scale")
       // lineitem (the biggest replicated fact) — the receipt must be
       // scan-dominated, not planning-dominated, to discriminate
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.lineitem(spark, dir)
       val nCommits = 8
       (0 until nCommits).foreach { k =>
         cat.append("scale.lineitem", li.filter(

@@ -23,7 +23,9 @@ import org.apache.spark.sql.SparkSession
   *  - checkpoint cleaner (iterative ops' reliable checkpoints are
   *    otherwise never reclaimed over a long run);
   *  - explicit 64 MB broadcast threshold (dimension tables stay
-  *    broadcast at sf0.1 without relying on stats). */
+  *    broadcast at sf0.1 without relying on stats);
+  *  - `file:` through [[NioLocalFileSystem]] (no `chmod` process per
+  *    created file or dir when the native-hadoop library is absent). */
 object Sessions {
   def build(cpus: String, extra: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
@@ -52,6 +54,7 @@ object Sessions {
       // JDBC connection gets an isolated newSession() that cannot see
       // them (TABLE_OR_VIEW_NOT_FOUND for every announced table)
       .config("spark.sql.hive.thriftServer.singleSession", "true")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     extra.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -131,7 +131,7 @@ object SparkEntry {
       val basePath = s"$tmp/graft_mv_base_$tag"
       val mvPath = s"$tmp/graft_mv_sum_$tag"
       if (!new java.io.File(s"$basePath/_SUCCESS").exists())
-        s.read.parquet(s"$d/lineitem.parquet")
+        Tables.lineitem(s, d)
           .write.mode("overwrite").parquet(basePath)
       MatView.build(s, basePath, mvPath,
         keys = Seq("l_returnflag", "l_linestatus"),
@@ -160,7 +160,7 @@ object SparkEntry {
       val tag = fixtureTag(d, src)
       val basePath = s"$tmp/graft_mvi_base_$tag"
       val mvPath = s"$tmp/graft_mvi_sum_$tag"
-      val all = s.read.parquet(s"$d/lineitem.parquet")
+      val all = Tables.lineitem(s, d)
       val cut = 2999L
       all.filter(col("l_orderkey") <= cut)
         .write.mode("overwrite").parquet(basePath)
@@ -1036,7 +1036,7 @@ object SparkEntry {
       // session rebuilds, and the tag still carries the source's
       // mtime+size so regenerated testdata rebuilds.
       val basePath = mvFixture(s, d)
-      s.read.parquet(basePath)
+      Tables.read(s, basePath)
         .groupBy(col("l_returnflag"))
         .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),
           count(lit(1)).as("n_rows"),
@@ -1056,7 +1056,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       import graft.functions.Rounding.round4eps
       val basePath = mvIncFixture(s, d)
-      s.read.parquet(basePath)
+      Tables.read(s, basePath)
         .groupBy(col("l_linestatus"))
         .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),
           count(lit(1)).as("n_rows"),
@@ -1077,7 +1077,7 @@ object SparkEntry {
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val basePath = s"$tmp/graft_mvi_base_$tag"
       val mvPath = s"$tmp/graft_mvi_sum_$tag"
-      val all = s.read.parquet(s"$d/lineitem.parquet")
+      val all = Tables.lineitem(s, d)
       val cut = 2999L
       // fresh split every run: refresh must converge to the full table
       all.filter(col("l_orderkey") <= cut)
@@ -1088,7 +1088,7 @@ object SparkEntry {
       val delta = all.filter(col("l_orderkey") > cut)
       delta.write.mode("append").parquet(basePath)
       MatView.refresh(s, basePath, delta)
-      s.read.parquet(basePath)
+      Tables.read(s, basePath)
         .groupBy(col("l_linestatus"))
         .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),
           count(lit(1)).as("n_rows"),

@@ -1,22 +1,122 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata star schema
-  * (see /root/repo/TESTDATA.md and FIXTURES.md §B).
+  * (see TESTDATA.md and FIXTURES.md §B).
   *
   * All queries read parquet directly so Catalyst's vectorized parquet
   * scan, column pruning and predicate pushdown apply. At 100 TB these
   * would be catalog tables / Iceberg scans; the shape of every
   * downstream plan (scan → prune → push) is identical.
+  *
+  * Every read goes through [[read]], which hands the reader a recorded
+  * schema instead of letting Spark infer one: a bare
+  * `spark.read.parquet(path)` runs one schema-inference job per table
+  * per query. The recorded schema is table metadata, the way an Iceberg
+  * catalog keeps it (`pipeline.LakeMeta` does the same for the lake);
+  * every query still lists and scans its files.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Session confs that change how parquet physical types map to Spark
+    * types; their values are part of the resolver's key. */
+  private val typeMappingConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private final case class Key(path: String, confs: Seq[String])
+  /** (relative name, size, mtime µs) of each data file, sorted by name. */
+  private type Fingerprint = Seq[(String, Long, Long)]
+  private final case class Recorded(fingerprint: Fingerprint, schema: StructType)
+
+  /** One entry per distinct (path, type-mapping confs), JVM-wide. The key
+    * makes the recorded schema equal what a fresh inference would return
+    * in any session, so it is deliberately not per-session: it survives
+    * Bench and Verify session rebuilds and is shared by Thrift sessions. */
+  private val recorded = new ConcurrentHashMap[Key, Recorded]()
+
+  /** `path`'s schema as `spark.read.parquet(path).schema` would infer it
+    * under the session's type-mapping confs, without a Spark job while
+    * the files are unchanged. A change of the files' `java.nio` fingerprint
+    * (file names, sizes, mtimes) re-infers once; a column recorded
+    * before that now has another type throws instead of handing queries
+    * a drifted schema. Paths outside the local filesystem are inferred
+    * on every call. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val local = localPath(path)
+    if (local.isEmpty) return spark.read.parquet(path).schema
+    val key = Key(local.get.toString, typeMappingConfs.map(spark.conf.get))
+    val fp = fingerprint(local.get)
+    val hit = recorded.get(key)
+    if (hit != null && hit.fingerprint == fp) return hit.schema
+    val fresh = Recorded(fp, spark.read.parquet(path).schema)
+    recorded.compute(key, (_, prev) => {
+      if (prev != null) checkNoDrift(path, prev.schema, fresh.schema)
+      fresh
+    }).schema
+  }
+
+  /** The one read path for parquet tables: a read with the recorded
+    * schema of [[schemaOf]]. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** The local file a path names; None for other filesystems and for
+    * globs, whose file set the fingerprint walk cannot see. */
+  private def localPath(path: String): Option[Path] = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    val local = uri.getScheme == null || uri.getScheme == "file"
+    if (!local || "*?[{".exists(uri.getPath.contains(_))) None
+    else Some(Paths.get(uri.getPath).toAbsolutePath.normalize)
+  }
+
+  /** Spark's own listing rule (`InMemoryFileIndex.shouldFilterOutPathName`):
+    * hidden and `_` entries are skipped, except partition dirs and the
+    * parquet summary files. */
+  private def listed(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) ||
+      name.startsWith("_metadata") || name.startsWith("_common_metadata")
+
+  /** A flat file is its own single entry (relative name ""). */
+  private def fingerprint(root: Path): Fingerprint =
+    if (!Files.exists(root)) Nil
+    else {
+      import scala.jdk.CollectionConverters._
+      val stream = Files.find(root, Int.MaxValue, (f, a) => a.isRegularFile &&
+        root.relativize(f).iterator.asScala.forall(seg => listed(seg.toString)))
+      try stream.iterator.asScala.map { f =>
+        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+        (root.relativize(f).toString, a.size, a.lastModifiedTime.to(TimeUnit.MICROSECONDS))
+      }.toVector.sortBy(_._1)
+      finally stream.close()
+    }
+
+  private def checkNoDrift(path: String, before: StructType, after: StructType): Unit = {
+    val was = before.fields.map(f => f.name -> f.dataType).toMap
+    after.fields.foreach { f =>
+      was.get(f.name).filter(_.catalogString != f.dataType.catalogString).foreach { old =>
+        val table = Paths.get(path).getFileName.toString.stripSuffix(".parquet")
+        throw new IllegalStateException(
+          s"table $table ($path): column ${f.name} changed type from " +
+            s"${old.catalogString} to ${f.dataType.catalogString}; " +
+            "queries were written against the recorded type")
+      }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

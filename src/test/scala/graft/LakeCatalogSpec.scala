@@ -239,6 +239,12 @@ class LakeCatalogSpec extends AnyFunSuite {
     assert(fs.map(_.getAs[Long]("commit")).toSet === Set(1L, 2L))
     // footer record counts conserve the table's row count, data unread
     assert(fs.map(_.getAs[Long]("record_count")).sum === cat.table("raw.f").count())
+    // per commit, footer counts and the snapshot log's added_records agree
+    val perCommit = fs.groupBy(_.getAs[Long]("commit"))
+      .map { case (c, rs) => c -> rs.map(_.getAs[Long]("record_count")).sum }
+    assert(perCommit === Map(1L -> 2L, 2L -> 1L))
+    assert(cat.snapshots("raw.f").collect().map(_.getAs[Long]("added_records")).toSeq
+      === Seq(2L, 1L))
     // hidden/protocol dirs are invisible to the files listing
     assert(fs.forall(r => !r.getAs[String]("file_path").contains("/.")))
   }

@@ -104,14 +104,18 @@ class MatViewSpec extends AnyFunSuite {
   test("the registry gate shape (rounded aggregates) is served by the MV") {
     import graft.functions.Rounding.round4eps
     withMv { mvPath =>
-      val q = spark.read.parquet(base)
-        .groupBy(col("l_returnflag"))
-        .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),
-          count(lit(1)).as("n_rows"),
-          round4eps(sum(col("l_extendedprice"))).as("sum_price"))
-        .orderBy(col("l_returnflag"))
-      assert(readsMv(q, mvPath), "rounded-aggregate shape should still rewrite")
-      assert(q.collect().nonEmpty)
+      // the gates read through Tables.read; the rewrite matches on the
+      // relation's root path, so a schema-given read must hit it too
+      Seq(spark.read.parquet(base), Tables.read(spark, base)).foreach { src =>
+        val q = src
+          .groupBy(col("l_returnflag"))
+          .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),
+            count(lit(1)).as("n_rows"),
+            round4eps(sum(col("l_extendedprice"))).as("sum_price"))
+          .orderBy(col("l_returnflag"))
+        assert(readsMv(q, mvPath), "rounded-aggregate shape should still rewrite")
+        assert(q.collect().nonEmpty)
+      }
     }
   }
 

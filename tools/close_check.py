@@ -17,6 +17,11 @@ Checks, in order:
      registry gate) or from a spec under src/test — the registry has
      grown across 11 rounds and nothing else proves a refactor didn't
      silently strand an operator without its gate.
+  5. One read path for table files: no `read.parquet` of a
+     `<dir>/<table>.parquet` literal under src/main outside Tables.scala.
+     `graft.Tables.read` supplies the recorded schema (no inference job
+     per load) and its drift check; a raw read bypasses both. Files in
+     TABLE_READ_ALLOWED must say why they read raw.
 
 Usage: python3 tools/close_check.py [verify_out_dir]
 Exit 0 = all green; prints a receipt line per check.
@@ -173,5 +178,31 @@ if orphans:
 else:
     print(f"PASS orphan-operators: all {len(public)} public operator defs "
           "reachable from a gate or spec")
+
+# 5. table reads go through graft.Tables
+TABLE_READ = re.compile(
+    r"\bread\b(?:\s*\.\s*(?:option|options|schema|format)\((?:[^()]|\([^()]*\))*\))*"
+    r"\s*\.\s*parquet\(\s*s?\"[^\"]*/[^\"/]*\.parquet\"\s*\)")
+TABLE_READ_ALLOWED = {
+    "src/main/scala/graft/ScaledData.scala":
+        "offline generator: copies each table with its on-disk types, "
+        "before any query reads it",
+}
+raw_reads = []
+for f in sorted(glob.glob(os.path.join(REPO, "src/main/scala/**/*.scala"),
+                          recursive=True)):
+    rel = os.path.relpath(f, REPO)
+    if rel == "src/main/scala/graft/Tables.scala" or rel in TABLE_READ_ALLOWED:
+        continue
+    text = open(f).read()
+    raw_reads += [f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+                  for m in TABLE_READ.finditer(text)]
+if raw_reads:
+    print(f"FAIL table-read-path: raw read.parquet of a table file outside "
+          f"Tables.scala (use graft.Tables.read / load): {raw_reads}")
+    fail = 1
+else:
+    print(f"PASS table-read-path: table files are read only through "
+          f"graft.Tables ({len(TABLE_READ_ALLOWED)} allowlisted file)")
 
 sys.exit(fail)
