@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints one JSON line
@@ -15,21 +14,14 @@ import org.apache.spark.sql.SparkSession
   * and report the second, steady-state time (the right comparison for a
   * long-running engine, where per-query warmup amortizes to nothing).
   *
-  * Timeout-proofing (the round-3 bench died at rc=124 with NOTHING
-  * written because results only materialized at the end; the round-4
-  * bench crashed mid-suite when a load spike starved the heartbeat and
-  * stopped the SparkContext):
-  *  - every run is bounded by SPARK_GRAFT_BENCH_CAP_SEC (default 60 s)
-  *    via job-group cancellation; a breached query reports -1 and the
-  *    SparkSession is REBUILT (a cancelled group leaves the shared JVM
-  *    degraded — round 4 showed trivial queries timing out right after
-  *    heavy ones);
-  *  - queries run cheapest-first by last observed Verify wall time
-  *    (tools/verify_costs.tsv), so the expensive iterative tail cannot
-  *    sink the cheap majority;
-  *  - heartbeat/network timeouts are raised so load spikes do not kill
-  *    the context;
-  *  - BENCH_FULL.json is rewritten after EVERY query;
+  * Every run goes through [[QueryRunner]] (cap, cancel, session
+  * rebuild, cache sweep, cheapest-first order, shuffle bytes). What is
+  * Bench's own:
+  *  - the cap is SPARK_GRAFT_BENCH_CAP_SEC (default 60 s); a breached
+  *    or failed query reports -1;
+  *  - BENCH_FULL.json is rewritten after EVERY query (the round-3
+  *    bench died at rc=124 with nothing written because results only
+  *    materialized at the end);
   *  - the compact stdout line is re-printed every 10 queries, so a
   *    harness kill still leaves a parseable last line with partials.
   */
@@ -38,8 +30,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val capSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_CAP_SEC", "60").toInt
-
-    var spark = Sessions.build(cpus)
 
     // Every unpartitioned window in this library runs over a
     // DELIBERATELY collapsed frame (calendar-bounded daily series,
@@ -56,109 +46,34 @@ object Bench {
     // regression outside a measured window still prints.
     val windowExecLogger = "org.apache.spark.sql.execution.window.WindowExec"
 
-    // Per-query shuffle-volume accounting — the direct "which query
-    // would bottleneck the interconnect at 100 TB" signal, reported
-    // alongside seconds in BENCH_FULL.json. A task-end listener
-    // attributes each task's shuffle WRITE bytes to the query whose
-    // job group is active; the counter resets at the start of every
-    // measured run so the number matches the reported (steady-state)
-    // time. Listener delivery is async — a straggler task can land on
-    // the next query's counter; MB-scale noise, documented as such.
-    val shuffleBytes =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    @volatile var currentQuery: String = ""
-    val shuffleListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val q = currentQuery
-        if (te.taskMetrics != null && q.nonEmpty) {
-          shuffleBytes
-            .computeIfAbsent(q, _ => new java.util.concurrent.atomic.LongAdder)
-            .add(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(shuffleListener)
+    // Per-query shuffle-volume accounting (QueryRunner's listener) —
+    // the direct "which query would bottleneck the interconnect at
+    // 100 TB" signal, reported alongside seconds in BENCH_FULL.json and
+    // reset at the start of every measured run so the number matches
+    // the reported (steady-state) time.
+    val runner = new QueryRunner("bench", capSec, () => Sessions.build(cpus))
 
-    /** One bounded run: construction + noop materialization inside a
-      * watchdog thread. On cap breach the query's job group is
-      * cancelled (the worker unblocks on the SparkException) and -1 is
-      * reported; the suite moves on instead of eating the whole
-      * harness budget on one regression. Returns (seconds, breached). */
+    /** One bounded run: construction + noop materialization. A failed
+      * or breached run reports -1 (unless the worker finished during
+      * the cancel grace). Returns (seconds, breached). */
     def runOnce(name: String): (Double, Boolean) = {
-      shuffleBytes.remove(name)
-      currentQuery = name
       // start marker on stderr: lets any DAGScheduler warning in the
       // log (e.g. >1 MB task binaries) be attributed to its query
       System.err.println(s"[bench] start $name")
-      @volatile var res = -1.0
-      val sc = spark.sparkContext
-      val t0 = System.nanoTime()
-      val worker = new Thread(() => {
-        try {
-          sc.setJobGroup(s"bench-$name", name, interruptOnCancel = true)
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          res = (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        } finally sc.clearJobGroup()
-      }, s"bench-$name")
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(capSec * 1000L)
-      if (worker.isAlive) {
-        System.err.println(s"[bench] $name exceeded ${capSec}s cap; cancelling")
-        sc.cancelJobGroup(s"bench-$name")
-        worker.join(30000L)
-        if (worker.isAlive) {
-          // driver-side hang: no cancellable job — interrupt; the
-          // caller rebuilds the session, so a zombie cannot skew
-          // later measurements.
-          System.err.println(s"[bench] $name unresponsive to job-group " +
-            "cancel; interrupting worker")
-          worker.interrupt()
-        }
-        (res, true)
-      } else (res, false)
+      val r = runner.run(name)(s => SparkEntry.queries(name)(s, sfDir)
+        .write.format("noop").mode("overwrite").save())
+      (if (r.value.isRight) r.seconds else -1.0, r.breached)
     }
 
     def run(name: String): Double = LogScope.withLevel(windowExecLogger,
         org.apache.logging.log4j.Level.ERROR) {
-      // Cache hygiene: operators persist shared projections (shingle
-      // index, LSH buckets) with caller-owned lifecycle. Clearing
-      // BEFORE each query isolates it (no free ride on a previous
-      // query's cache); a re-run then sees the steady-state plan.
-      spark.catalog.clearCache()
-      // clearCache drops DataFrame cache entries but NOT checkpoint
-      // RDD blocks (Dedup CC / PageRank / propagation loops checkpoint
-      // per round) — release those too, or storage memory ratchets up
-      // across the suite and late queries pay GC pressure for early
-      // queries' blocks. (Warning-scoped: see sweepPersistentRdds.)
-      Caching.sweepPersistentRdds(spark)
-      val (t1, breached1) = runOnce(name)
-      if (breached1) {
-        // cancelled job groups degrade the shared JVM (round 4: trivial
-        // queries hit the cap right after heavy ones) — start clean
-        System.err.println(s"[bench] rebuilding SparkSession after $name")
-        try spark.stop() catch { case _: Throwable => () }
-        spark = Sessions.build(cpus)
-        spark.sparkContext.addSparkListener(shuffleListener)
-        return t1
-      }
-      if (t1 < 0 || t1 < 1.0) return t1 // failed, or cheap: one run
-      val (t2, breached2) = runOnce(name) // steady-state for heavy queries
-      if (breached2) {
-        System.err.println(s"[bench] rebuilding SparkSession after $name")
-        try spark.stop() catch { case _: Throwable => () }
-        spark = Sessions.build(cpus)
-        spark.sparkContext.addSparkListener(shuffleListener)
-      }
-      t2
+      val (t1, breached) = runOnce(name)
+      if (breached || t1 < 1.0) t1 // breached, failed, or cheap: one run
+      else runOnce(name)._1 // steady-state for heavy queries
     }
 
     // JVM / codegen / parquet-footer warmup (not measured)
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    try SparkEntry.entry(runner.spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 
     // The pipeline gate entries construct a fixture warehouse (3 ingest
@@ -193,28 +108,11 @@ object Bench {
       // its cost is the rebuild); the serve path is benched as
       // q_mv_inc_query against the once-per-JVM refreshed fixture
       "q_mv_rewrite_inc")
-    // Cheapest-first by last observed Verify time (unknown → 0): the
-    // iterative graph tail runs last, after every cheap query has
-    // already landed its number.
-    val costs: Map[String, Double] = {
-      val p = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_COSTS",
-        "/root/repo/tools/verify_costs.tsv"))
-      if (java.nio.file.Files.exists(p))
-        scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(p)).asScala.flatMap { line =>
-            line.split('\t') match {
-              case Array(n, t) => scala.util.Try(n -> t.toDouble).toOption
-              case _ => None
-            }
-          }.toMap
-      else Map.empty
-    }
     // optional args: bench only the named queries (local iteration aid)
     val wanted = args.toSet
-    val todo = SparkEntry.queries.keys.toSeq
+    val todo = QueryRunner.costOrdered(SparkEntry.queries.keys.toSeq
       .filterNot(notQueries)
-      .filter(n => wanted.isEmpty || wanted(n))
-      .sortBy(n => (costs.getOrElse(n, 0.0), n))
+      .filter(n => wanted.isEmpty || wanted(n)))
 
     // Locale-pinned formatting: f"$v%.3f" is locale-sensitive (a
     // comma-decimal JVM locale would emit unparseable JSON).
@@ -244,7 +142,7 @@ object Bench {
     def writeFull(done: Boolean): Unit = {
       val total = results.values.filter(_ >= 0).sum
       val shuffles = results.keys.map { k =>
-        val mb = Option(shuffleBytes.get(k)).map(_.sum / 1048576.0).getOrElse(0.0)
+        val mb = runner.shuffleWriteBytes(k) / 1048576.0
         s""""$k":${String.format(java.util.Locale.ROOT, "%.1f", Double.box(mb))}"""
       }.mkString(""""shuffle_write_mb":{""", ",", "},")
       val json = results.map { case (k, v) => s""""$k":${fmt(v)}""" }
@@ -269,7 +167,7 @@ object Bench {
     }
     writeFull(done = true)
     printCompact(done = true)
-    spark.stop()
+    runner.spark.stop()
   }
 
   /** Headline queries for the compact stdout line — one per operator

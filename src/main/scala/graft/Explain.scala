@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the physical plan of the named SparkEntry
   * queries (default: the flagship joins/aggregates) against sf0.01.
   * Used to verify the scale-critical plan properties — column-pruned
@@ -13,23 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Spark 4 per-session artifact isolation routes EVERY Janino
-      // class-resolution probe during codegen compilation through an
-      // ExecutorClassLoader RPC fetch (even in local mode) and adds
-      // per-task isolated-classloader setup: measured 5x wall on the
-      // minhash-LSH query (38 codegen units, 15.2s -> 3.0s compile).
-      // This engine runs one library in one JVM - no session-isolated
-      // artifacts to protect.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .getOrCreate()
+    val spark = Sessions.build("4")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq

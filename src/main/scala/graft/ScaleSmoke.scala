@@ -31,7 +31,9 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val spark = Sessions.build("32")
+    // uncapped: no breach, so the session is never rebuilt
+    val runner = new QueryRunner("scale", 0, () => Sessions.build("32"))
+    val spark = runner.spark
 
     val dir = java.nio.file.Files.createTempDirectory("graft-scale").toString
     // Shift every listed id column by the same per-copy stride: join
@@ -46,28 +48,16 @@ object ScaleSmoke {
       s"${Tables.lineitem(spark, dir).count()} lineitems")
 
     val wanted = args.toSet
-    // Per-label shuffle accounting (same listener pattern as Bench):
-    // the claims in README's scale table — "candidate volume tracks
+    // Per-label shuffle accounting (QueryRunner's listener): the
+    // claims in README's scale table — "candidate volume tracks
     // density", "one orderkey shuffle" — get a measured MB next to the
     // seconds instead of plan-reading alone.
-    val shuffled = new java.util.concurrent.atomic.LongAdder
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            shuffled.add(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
     def run(label: String)(df: => DataFrame): Unit =
       if (wanted.isEmpty || wanted(label)) {
-        spark.catalog.clearCache()
-        Caching.sweepPersistentRdds(spark)
-        shuffled.reset()
-        val t0 = System.nanoTime()
-        val n = df.count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        val mb = shuffled.sum / 1048576.0
-        println(f"[scale] $label: $n rows in $secs%.1f s, shuffled $mb%.1f MB")
+        val r = runner.run(label)(_ => df.count())
+        val n = r.value.toTry.get
+        val mb = runner.shuffleWriteBytes(label) / 1048576.0
+        println(f"[scale] $label: $n rows in ${r.seconds}%.1f s, shuffled $mb%.1f MB")
       }
 
     run("exactGroups")(operators.Dedup.exactGroups(spark, dir))

@@ -1,31 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Timeout-proofing (a round whose Verify dies mid-run must still yield
-  * partial correctness rows, not `{}`): oracle_sql.json is written
-  * FIRST, each query runs under a watchdog cap (default 120 s,
-  * SPARK_GRAFT_VERIFY_CAP_SEC) with job-group cancellation, and
-  * progress is logged per query.
-  *
-  * Budget-proofing (rounds 3 and 4 both died mid-alphabet with ~half
-  * the registry unreported):
-  *  - queries run CHEAPEST-FIRST by last observed wall time
-  *    (tools/verify_costs.tsv, refreshed from each run's times.tsv) —
-  *    unknown queries first (they are the never-verified ones), known
-  *    slow ones last, so an overall budget kill costs the tail, not a
-  *    random alphabetic half;
-  *  - a cap breach leaves the shared local JVM degraded (cancelled job
-  *    groups + zombie codegen have 0-rowed innocent later queries), so
-  *    the SparkSession is REBUILT before the next query;
-  *  - caches and persisted/checkpointed RDD blocks are released
-  *    between queries, so storage pressure cannot ratchet across 134
-  *    sequential queries;
-  *  - heartbeat/network timeouts are raised: under sandbox load spikes
-  *    the default 10 s executor heartbeat misses and kills the
-  *    context ("Cannot call methods on a stopped SparkContext").
+  * Every query goes through [[QueryRunner]] (cap, cancel, session
+  * rebuild, cache sweep, cheapest-first order). What is Verify's own,
+  * so a run that dies mid-way still yields partial correctness rows,
+  * not `{}`:
+  *  - oracle_sql.json is written FIRST;
+  *  - the cap is SPARK_GRAFT_VERIFY_CAP_SEC (default 120 s);
+  *  - errors.tsv and times.tsv are rewritten after every query; a
+  *    breached query still records its wall seconds, so it sorts last
+  *    once times.tsv is copied to tools/verify_costs.tsv.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -36,7 +22,6 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val capSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_CAP_SEC", "120").toInt
 
-    var spark = Sessions.build(cpus)
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -56,23 +41,6 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    /** Last-observed per-query seconds, committed as
-      * tools/verify_costs.tsv ("name\tseconds"); absent file or rows →
-      * cost 0 (run first). */
-    val costs: Map[String, Double] = {
-      val p = Paths.get(sys.env.getOrElse("SPARK_GRAFT_COSTS",
-        "/root/repo/tools/verify_costs.tsv"))
-      if (Files.exists(p))
-        scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(p))
-          .asScala.flatMap { line =>
-            line.split('\t') match {
-              case Array(n, t) => scala.util.Try(n -> t.toDouble).toOption
-              case _ => None
-            }
-          }.toMap
-      else Map.empty
-    }
-
     // Per-query failures persisted next to the results: a query that
     // ERRORS writes no parquet, so without this it is indistinguishable
     // in the correctness report from one the run never reached (round 5
@@ -84,81 +52,28 @@ object Verify {
     // unconditionally, so clear this one too
     try Files.deleteIfExists(Paths.get(s"$outDir/errors.tsv"))
     catch { case _: Throwable => () }
-    // synchronized: a zombie worker surviving a cap breach can throw —
-    // and record — concurrently with the current query's worker
-    def recordError(name: String, msg: String): Unit = errors.synchronized {
+    def recordError(name: String, msg: String): Unit = {
       errors.append(name).append('\t')
         .append(Option(msg).getOrElse("null").replace('\n', ' ')).append('\n')
       try Files.writeString(Paths.get(s"$outDir/errors.tsv"), errors.toString)
       catch { case _: Throwable => () }
     }
 
-    /** Run under the cap; returns true if the cap was breached (the
-      * session must then be considered poisoned). */
-    def runCapped(name: String, body: => Unit): Boolean = {
-      val sc = spark.sparkContext
-      val worker = new Thread(() => {
-        try {
-          sc.setJobGroup(s"verify-$name", name, interruptOnCancel = true)
-          body
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          recordError(name, e.getMessage)
-        } finally sc.clearJobGroup()
-      }, s"verify-$name")
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(capSec * 1000L)
-      if (worker.isAlive) {
-        System.err.println(s"[verify] $name exceeded ${capSec}s cap; cancelling")
-        sc.cancelJobGroup(s"verify-$name")
-        worker.join(30000L)
-        if (worker.isAlive) {
-          // driver-side hang (planning/codegen): no cancellable job —
-          // interrupt the thread; the session is rebuilt by the caller
-          // either way, so a surviving zombie cannot contaminate
-          // later queries.
-          System.err.println(s"[verify] $name unresponsive to job-group " +
-            "cancel; interrupting worker")
-          worker.interrupt()
-        }
-        true
-      } else false
-    }
-
     val times = new StringBuilder
-    SparkEntry.queries.toSeq
-      .filter { case (name, _) => wanted.isEmpty || wanted(name) }
-      .sortBy { case (name, _) => (costs.getOrElse(name, 0.0), name) }
-      .foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val breached = runCapped(name,
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name"))
-        val secs = (System.nanoTime() - t0) / 1e9
+    val runner = new QueryRunner("verify", capSec, () => Sessions.build(cpus))
+    QueryRunner.costOrdered(SparkEntry.queries.keys.toSeq
+      .filter(n => wanted.isEmpty || wanted(n)))
+      .foreach { name =>
+        val r = runner.run(name)(s => SparkEntry.queries(name)(s, sfDir)
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        r.value.swap.foreach(e => recordError(name, e.getMessage))
         System.err.println(String.format(java.util.Locale.ROOT,
-          "[verify] %s done in %.1f s", name, Double.box(secs)))
+          "[verify] %s done in %.1f s", name, Double.box(r.seconds)))
         times.append(String.format(java.util.Locale.ROOT,
-          "%s\t%.1f%n", name, Double.box(secs)))
+          "%s\t%.1f%n", name, Double.box(r.seconds)))
         try Files.writeString(Paths.get(s"$outDir/times.tsv"), times.toString)
         catch { case _: Throwable => () }
-        if (breached) {
-          // A cancelled job group leaves the shared JVM degraded (this
-          // 0-rowed a trivial query in round 4) — start clean.
-          System.err.println(s"[verify] rebuilding SparkSession after $name")
-          try spark.stop() catch { case _: Throwable => () }
-          spark = Sessions.build(cpus)
-        } else {
-          // Operators persist shared projections (shingle index, LSH
-          // buckets) with caller-owned lifecycle; iterative ops leave
-          // checkpoint blocks. Release both so storage cannot ratchet
-          // across the suite.
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
       }
-    spark.catalog.clearCache()
-    spark.stop()
+    runner.spark.stop()
   }
 }

@@ -20,16 +20,8 @@ import java.sql.DriverManager
 object MultiSessionProbe {
   def main(args: Array[String]): Unit = {
     val port = args(0).toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-multisession-probe")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.hive.thriftServer.singleSession", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build("4",
+      Map("spark.sql.hive.thriftServer.singleSession" -> "false"))
     val h = SqlEndpoint.start(spark, port, multiSession = true)
     try {
       Class.forName("org.apache.hive.jdbc.HiveDriver")

@@ -37,21 +37,13 @@ object ThriftMultiProbe {
     // multiSession needs singleSession=false — a STATIC conf, hence
     // this dedicated JVM (Sessions.build pins it true for the library
     // surface; see MultiSessionProbe for the original derivation)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-thriftmulti-probe")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.hive.thriftServer.singleSession", "false")
-      // catalog confs MUST ride the builder (SparkConf): multi-session
+    val spark = graft.Sessions.build("4", Map(
+      "spark.sql.hive.thriftServer.singleSession" -> "false",
+      // catalog confs MUST be build-time (SparkConf): multi-session
       // mode hands each connection a fresh `newSession()`, which does
-      // NOT inherit runtime `conf.set` values — only build-time ones
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse", wh)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      // NOT inherit runtime `conf.set` values
+      "spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
+      "spark.sql.catalog.graft.warehouse" -> wh))
     try {
       // seed the raw layer with the gate fixture's three hourly ticks
       val p = new Pipeline(spark, wh)

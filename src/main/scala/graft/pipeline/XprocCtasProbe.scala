@@ -16,15 +16,7 @@ package graft.pipeline
 object XprocCtasProbe {
   def main(args: Array[String]): Unit = {
     val wh = args(0); val tag = args(1); val iters = args(2).toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-xproc-ctas-probe")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build("2")
     try {
       import spark.implicits._
       val cat = new LakeCatalog(spark, wh)

@@ -22,6 +22,11 @@ Checks, in order:
      `graft.Tables.read` supplies the recorded schema (no inference job
      per load) and its drift check; a raw read bypasses both. Files in
      TABLE_READ_ALLOWED must say why they read raw.
+  6. One session factory: no `SparkSession.builder(` under src/main
+     outside Sessions.scala. `graft.Sessions.build(cpus, extra)` carries
+     every conf the engine needs (extensions, UTC, non-ANSI, artifact
+     isolation off, heartbeat/network timeouts, NioLocalFileSystem);
+     a hand-built session silently drifts from it.
 
 Usage: python3 tools/close_check.py [verify_out_dir]
 Exit 0 = all green; prints a receipt line per check.
@@ -204,5 +209,24 @@ if raw_reads:
 else:
     print(f"PASS table-read-path: table files are read only through "
           f"graft.Tables ({len(TABLE_READ_ALLOWED)} allowlisted file)")
+
+# 6. sessions are built only by graft.Sessions
+SESSIONS = "src/main/scala/graft/Sessions.scala"
+builders = []
+for f in sorted(glob.glob(os.path.join(REPO, "src/main/scala/**/*.scala"),
+                          recursive=True)):
+    rel = os.path.relpath(f, REPO)
+    if rel == SESSIONS:
+        continue
+    text = open(f).read()
+    builders += [f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+                 for m in re.finditer(r"SparkSession\s*\.\s*builder\(", text)]
+if builders:
+    print(f"FAIL session-factory: SparkSession.builder( outside Sessions.scala "
+          f"(use graft.Sessions.build(cpus, extra)): {builders}")
+    fail = 1
+else:
+    print("PASS session-factory: sessions under src/main are built only by "
+          "graft.Sessions.build")
 
 sys.exit(fail)
