@@ -13,6 +13,9 @@ package graft
   * would double suite time for no information. Slower queries run twice
   * and report the second, steady-state time (the right comparison for a
   * long-running engine, where per-query warmup amortizes to nothing).
+  * BENCH_FULL.json's `reported_run` says which run each query reports
+  * (1 = cold, 2 = steady state), since a first run near 1 s switches
+  * between the two on timing noise.
   *
   * Every run goes through [[QueryRunner]] (cap, cancel, session
   * rebuild, cache sweep, cheapest-first order, shuffle bytes). What is
@@ -65,11 +68,12 @@ object Bench {
       (if (r.value.isRight) r.seconds else -1.0, r.breached)
     }
 
-    def run(name: String): Double = LogScope.withLevel(windowExecLogger,
+    /** (seconds, which run they are: 1 = cold, 2 = steady state). */
+    def run(name: String): (Double, Int) = LogScope.withLevel(windowExecLogger,
         org.apache.logging.log4j.Level.ERROR) {
       val (t1, breached) = runOnce(name)
-      if (breached || t1 < 1.0) t1 // breached, failed, or cheap: one run
-      else runOnce(name)._1 // steady-state for heavy queries
+      if (breached || t1 < 1.0) (t1, 1) // breached, failed, or cheap: one run
+      else (runOnce(name)._1, 2) // steady-state for heavy queries
     }
 
     // JVM / codegen / parquet-footer warmup (not measured)
@@ -120,6 +124,7 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val reportedRun = scala.collection.mutable.Map.empty[String, Int]
     // Full per-query detail goes to a file (rewritten incrementally);
     // stdout gets ONE compact line per checkpoint. The harness captures
     // only the last ~2000 chars of stdout, so the printed line
@@ -145,10 +150,12 @@ object Bench {
         val mb = runner.shuffleWriteBytes(k) / 1048576.0
         s""""$k":${String.format(java.util.Locale.ROOT, "%.1f", Double.box(mb))}"""
       }.mkString(""""shuffle_write_mb":{""", ",", "},")
+      val runs = results.keys.map(k => s""""$k":${reportedRun(k)}""")
+        .mkString(""""reported_run":{""", ",", "},")
       val json = results.map { case (k, v) => s""""$k":${fmt(v)}""" }
         .mkString(
           s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{""",
-          ",", s"""},$shuffles${suffix(done)}""")
+          ",", s"""},$shuffles$runs${suffix(done)}""")
       try java.nio.file.Files.write(fullPath, json.getBytes("UTF-8"))
       catch { case e: Throwable =>
         System.err.println(s"[bench] cannot write $fullPath: ${e.getMessage}") }
@@ -161,7 +168,9 @@ object Bench {
     }
 
     todo.zipWithIndex.foreach { case (n, i) =>
-      results(n) = run(n)
+      val (secs, which) = run(n)
+      results(n) = secs
+      reportedRun(n) = which
       writeFull(done = false)
       if ((i + 1) % 10 == 0) printCompact(done = false)
     }

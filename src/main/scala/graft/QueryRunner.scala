@@ -13,12 +13,16 @@ import org.apache.spark.sql.SparkSession
   * the registry unreported; in round 4 trivial queries timed out or
   * came back with 0 rows right after heavy ones):
   *  - every run is a daemon worker under job group `<tag>-<name>`; past
-  *    `capSec` (0 = no cap) the group is cancelled, the worker gets
-  *    30 s to unwind, then is interrupted (a driver-side hang in
-  *    planning or codegen has no cancellable job);
+  *    `capSec` (0 = no cap) the group is cancelled together with any
+  *    job it submits later (a query caught between jobs, planning on
+  *    the driver, would otherwise start its next job and run on), the
+  *    worker gets 30 s to unwind, then is interrupted (a driver-side
+  *    hang in planning or codegen has no cancellable job);
   *  - a breached run leaves the shared local JVM degraded (cancelled
   *    job groups, zombie codegen), so the session is stopped and
-  *    rebuilt from `newSession` before `run` returns;
+  *    rebuilt from `newSession` before `run` returns; the new context
+  *    does not remember the cancelled group, so a later run of the
+  *    same name is not refused;
   *  - before the first run of each name the DataFrame cache and every
   *    persisted or checkpointed RDD block are released, so no query
   *    free-rides on — or pays GC pressure for — a predecessor's blocks.
@@ -105,7 +109,7 @@ final class QueryRunner(
     val breached = worker.isAlive
     if (breached) {
       System.err.println(s"[$tag] $name exceeded ${capSec}s cap; cancelling")
-      sc.cancelJobGroup(group)
+      sc.cancelJobGroupAndFutureJobs(group)
       worker.join(30000L)
       if (worker.isAlive) {
         System.err.println(s"[$tag] $name unresponsive to job-group " +

@@ -28,14 +28,27 @@ import org.apache.spark.sql.functions._
   *   sbt "runMain graft.ScaleSmoke pageRank bfsHops"
   */
 object ScaleSmoke {
+  /** Runs the smoke, then deletes every temp dir it made (the
+    * replicated corpus, the MV dir and the lake warehouse), also when
+    * an operator fails. */
   def main(args: Array[String]): Unit = {
+    val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def tempDir(prefix: String): String = {
+      val d = java.nio.file.Files.createTempDirectory(prefix)
+      made += d
+      d.toString
+    }
+    try smoke(args, tempDir) finally made.foreach(SparkEntry.deleteTreeQuietly)
+  }
+
+  private def smoke(args: Array[String], tempDir: String => String): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     // uncapped: no breach, so the session is never rebuilt
     val runner = new QueryRunner("scale", 0, () => Sessions.build("32"))
     val spark = runner.spark
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-scale").toString
+    val dir = tempDir("graft-scale")
     // Shift every listed id column by the same per-copy stride: join
     // keys stay consistent within a copy, disjoint across copies;
     // fixed-cardinality dimensions copy through unreplicated (every
@@ -176,7 +189,7 @@ object ScaleSmoke {
     run("lpaCommunitiesHashPath")(hashPath(operators.Graph.lpaCommunities(spark, dir)))
     run("kCoreHashPath")(hashPath(operators.Graph.kCorePeel(spark, dir)))
     run("mvServe") {
-      val mvDir = java.nio.file.Files.createTempDirectory("graft-scale-mv").toString
+      val mvDir = tempDir("graft-scale-mv")
       graft.plans.MatView.build(spark, s"$dir/lineitem.parquet", mvDir,
         keys = Seq("l_returnflag", "l_linestatus"),
         measures = Seq("l_quantity", "l_extendedprice"))
@@ -592,8 +605,7 @@ object ScaleSmoke {
     // GraftLakeSource.mkTable). The warehouse build itself is outside
     // the timed rows.
     if (wanted.isEmpty || wanted("v2SnapshotPruned") || wanted("v2FullRead")) {
-      val whDir = java.nio.file.Files
-        .createTempDirectory("graft-scale-wh").toString
+      val whDir = tempDir("graft-scale-wh")
       val cat = new graft.pipeline.LakeCatalog(spark, whDir)
       cat.createNamespace("scale")
       // lineitem (the biggest replicated fact) — the receipt must be

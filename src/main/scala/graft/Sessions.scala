@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{GraftSql, SparkSession}
 
 /** Shared SparkSession factory for the engine's mains (Verify, Bench,
   * Serve, ScaleSmoke previously carried near-identical copies whose
@@ -25,8 +28,29 @@ import org.apache.spark.sql.SparkSession
   *  - explicit 64 MB broadcast threshold (dimension tables stay
   *    broadcast at sf0.1 without relying on stats);
   *  - `file:` through [[NioLocalFileSystem]] (no `chmod` process per
-  *    created file or dir when the native-hadoop library is absent). */
+  *    created file or dir when the native-hadoop library is absent).
+  *
+  * Two more settings cut the fixed cost every lake commit and read
+  * pays; [[getOrCreate]] applies them, so the test session gets them
+  * as well:
+  *  - file listing stays on the driver. Past
+  *    `parallelPartitionDiscovery.threshold` (32) root paths or
+  *    subdirectories Spark lists with a job of one task per directory,
+  *    so a raw table's read turned into a 33-task job at its 33rd
+  *    hourly commit (318 ms of job time and 775 ms of task
+  *    deserialization, traced on a 4-core VM). In `local[N]` such a job
+  *    reads the same disk from the same JVM and only adds a conf
+  *    deserialization per task;
+  *  - the Hadoop conf carries no `yarn-default.xml` entries. This
+  *    engine never starts a YARN client, but those 520 entries were
+  *    half of the 1,103-entry conf (113 KB serialized, 8.9 ms to
+  *    deserialize on one warm thread of a 4-core VM) that every write
+  *    and listing task deserializes and every parquet file open copies
+  *    into a `JobConf`; without them it is 584 entries, 57 KB and
+  *    4.0 ms. */
 object Sessions {
+  private[graft] val YarnDefaults = "yarn-default.xml"
+
   def build(cpus: String, extra: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -56,8 +80,32 @@ object Sessions {
       .config("spark.sql.hive.thriftServer.singleSession", "true")
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     extra.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = getOrCreate(b)
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `b.getOrCreate()` with driver-side listing and a Hadoop conf
+    * without YARN defaults (see above). */
+  def getOrCreate(b: SparkSession.Builder): SparkSession = {
+    val s = b.config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue)
+      .getOrCreate()
+    // Registering a new default resource makes Hadoop reload every
+    // conf, which would bring the entries back. Building the shared
+    // state loads the file systems (the HDFS client registers the hdfs
+    // resources) and `JobConf`'s class init registers the mapred and
+    // yarn ones, so both run first.
+    val shared = GraftSql.sharedHadoopConf(s)
+    new org.apache.hadoop.mapred.JobConf(false)
+    dropYarnDefaults(s.sparkContext.hadoopConfiguration)
+    // the shared state's clone, which `sessionState.newHadoopConf()`
+    // copies for every read and write
+    dropYarnDefaults(shared)
+    s
+  }
+
+  private def dropYarnDefaults(conf: Configuration): Unit =
+    conf.iterator().asScala.map(_.getKey).toList
+      .filter(k => Option(conf.getPropertySources(k)).exists(_.forall(_ == YarnDefaults)))
+      .foreach(conf.unset)
 }

@@ -53,7 +53,7 @@ object SparkEntry {
       try deleteTreeQuietly(java.nio.file.Paths.get(dir))
       catch { case _: Throwable => () }))
 
-  private def deleteTreeQuietly(root: java.nio.file.Path): Unit =
+  private[graft] def deleteTreeQuietly(root: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(root)) {
       val st = java.nio.file.Files.walk(root)
       try {

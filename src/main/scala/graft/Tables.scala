@@ -87,7 +87,7 @@ object Tables {
   /** Spark's own listing rule (`InMemoryFileIndex.shouldFilterOutPathName`):
     * hidden and `_` entries are skipped, except partition dirs and the
     * parquet summary files. */
-  private def listed(name: String): Boolean =
+  private[graft] def listed(name: String): Boolean =
     !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) ||
       name.startsWith("_metadata") || name.startsWith("_common_metadata")
 

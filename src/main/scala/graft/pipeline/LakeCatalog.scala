@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -275,13 +276,46 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     // resolve the generation pointer ONCE: every path this frame scans
     // belongs to one generation — snapshot-isolated, no rename window
     val data = dataPath(name)
-    savedSchema(name) match {
-      case Some(sc) => spark.read.schema(sc).parquet(data)
+    oneSplit(savedSchema(name) match {
+      case Some(sc) => readData(spark.read.schema(sc), data)
       case None =>
-        val df = spark.read.option("mergeSchema", "true").parquet(data)
+        val df = readData(spark.read.option("mergeSchema", "true"), data)
         saveSchema(name, df.schema)
         df
-    }
+    })
+  }
+
+  /** Reads a data dir through its listed children, with the dir itself
+    * as `basePath` (partition discovery is unchanged). Handed the dir,
+    * Spark logs "All paths were ignored" for every read of a
+    * dot-prefixed generation. A dir with no listed child reads as
+    * empty, as the dir itself did; a missing dir fails as before. */
+  private def readData(r: DataFrameReader, dir: String): DataFrame = {
+    if (!Files.isDirectory(Paths.get(dir))) return r.parquet(dir)
+    import scala.jdk.CollectionConverters._
+    val stream = Files.list(Paths.get(dir))
+    val children = try stream.iterator().asScala.map(_.getFileName.toString)
+      .filter(graft.Tables.listed).toSeq.sorted.map(c => s"$dir/$c")
+    finally stream.close()
+    r.option("basePath", dir).parquet(children: _*)
+  }
+
+  /** A read of exactly one file that fits one split, as one partition.
+    * Spark already scans such a file with one task; `coalesce(1)`
+    * makes that `SinglePartition` visible to planning, so an aggregate
+    * or sort above the read needs no exchange. A file fits one split
+    * when it is no larger than both `maxPartitionBytes` and
+    * `openCostInBytes` (Spark's split size is never below the smaller
+    * of the two). Count and size come from the relation's already
+    * listed file index. */
+  private def oneSplit(df: DataFrame): DataFrame = {
+    val conf = spark.sessionState.conf
+    val maxBytes = math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+    val single = df.queryExecution.analyzed
+      .collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .exists(index => index.inputFiles.length == 1 && index.sizeInBytes <= maxBytes)
+    if (single) df.coalesce(1) else df
   }
 
   def table(name: String): DataFrame = {
@@ -469,7 +503,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       StructField("added_records", LongType)))
     if (!Files.exists(p)) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).json(p.toString)
+    else oneSplit(spark.read.schema(schema).json(p.toString))
       .orderBy(col("snapshot_id"))
   }
 

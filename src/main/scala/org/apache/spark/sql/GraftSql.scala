@@ -24,4 +24,9 @@ object GraftSql {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The shared state's Hadoop conf (private[sql]): the clone of the
+    * context's conf that every `sessionState.newHadoopConf()` copies. */
+  def sharedHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sharedState.hadoopConf
 }

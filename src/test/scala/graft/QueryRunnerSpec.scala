@@ -38,6 +38,23 @@ class QueryRunnerSpec extends AnyFunSuite {
     assert(runner.spark.range(10).count() === 10)
   }
 
+  test("a run caught between jobs at its cap has its later jobs refused") {
+    val runner = new QueryRunner("qr-future", 2, () => spark, _ => ())
+    val secondRan = new java.util.concurrent.atomic.AtomicBoolean
+    val r = runner.run("between") { s =>
+      s.range(10).count()
+      Thread.sleep(3000) // planning on the driver past the cap: no job to cancel
+      val n = s.range(10).count()
+      secondRan.set(true)
+      n
+    }
+    assert(r.breached)
+    assert(!secondRan.get)
+    assert(r.value.swap.toOption.exists(_.getMessage.contains("qr-future-between")), r.value)
+    // refused at once, not waited out for the 30 s grace
+    assert(r.seconds >= 2 && r.seconds < 10, r.seconds)
+  }
+
   test("a body that throws returns its error and is not a breach") {
     val built = new AtomicInteger
     val runner = new QueryRunner("qr-fail", 60,

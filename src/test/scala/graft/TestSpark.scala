@@ -12,7 +12,9 @@ import org.apache.spark.sql.types._
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    // through Sessions.getOrCreate: the suite runs on the engine's
+    // driver-side listing and YARN-free Hadoop conf
+    val s = Sessions.getOrCreate(SparkSession.builder()
       .master("local[4]")
       .appName("graft-tests")
       .config("spark.sql.shuffle.partitions", "4")
@@ -25,8 +27,7 @@ object TestSpark {
       .config("spark.sql.artifact.isolation.enabled", "false")
       // static conf: the thrift endpoint serves the owning session's
       // temp views only in singleSession mode (see GraftThriftServer)
-      .config("spark.sql.hive.thriftServer.singleSession", "true")
-      .getOrCreate()
+      .config("spark.sql.hive.thriftServer.singleSession", "true"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
