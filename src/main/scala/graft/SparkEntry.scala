@@ -781,7 +781,7 @@ object SparkEntry {
       val gens = rows.select("gen").distinct()
         .as[String].collect().sorted.mkString(",")
       val schemaMatches = graft.pipeline.LakeMeta
-        .savedSchema(wh, "raw.t").exists(sc =>
+        .resolve(wh, "raw.t").schema.exists(sc =>
           rows.columns.toSet.subsetOf(sc.fieldNames.toSet))
       val tagsIntact = cat.tags("raw.t") == Map("v1" -> 1L)
       val ops = cat.snapshots("raw.t")

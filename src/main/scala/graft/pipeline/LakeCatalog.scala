@@ -1,10 +1,12 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import LakeMeta.{CommitCol, TableState, deleteRecursive, hiddenCol}
 
 /** Namespaced lakehouse tables over partitioned parquet + a snapshot
   * commit log — the emulation of the reference's Iceberg REST catalog
@@ -42,52 +44,31 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * through the [[graft.sources.GraftCatalog]] plugin. */
   private[graft] def warehouse: String = warehouseDir
 
-  // Metadata layout + read helpers are shared with the DataSourceV2
-  // path mount (graft.sources.GraftLakeSource) via LakeMeta — one
-  // implementation so the two read paths can never drift.
+  // Every operation resolves the table ONCE (LakeMeta.resolve: one
+  // pointer read) and takes its data dir, listing, sidecars and log
+  // from that one generation — the same state the V2 surfaces read.
   private[graft] def tablePath(name: String): String =
     LakeMeta.tablePath(warehouseDir, name)
 
+  private def resolve(name: String): TableState = LakeMeta.resolve(warehouseDir, name)
+
   /** The current generation's data directory (pointer-resolved) —
-    * where data files actually live; [[tablePath]] is the container.
-    * Callers that capture this path read a snapshot-isolated
-    * generation (see [[TableCommit]]). */
-  private[graft] def dataPath(name: String): String =
-    LakeMeta.dataPath(warehouseDir, name)
+    * where data files actually live; [[tablePath]] is the container. */
+  private[graft] def dataPath(name: String): String = resolve(name).dir.toString
 
   /** Ensure the table exists in generation layout (creating an empty
-    * first generation / migrating a legacy dir) and return its data
-    * directory. Every write path funnels through this. */
-  private def ensureTable(name: String): Path = {
-    val parts = name.split('.')
-    require(parts.length == 2, s"expected namespace.table, got $name")
-    TableCommit.ensureTable(warehouseDir, parts(0), parts(1))
+    * first generation / migrating a legacy dir) and return its state.
+    * Every write path that adds a commit funnels through this.
+    *
+    * The schema sidecar records the table's full READ schema (data
+    * columns then hidden partition columns) at WRITE time, so reads
+    * never pay a footer-merge job — the planning cost Iceberg's
+    * metadata layer exists to avoid (schema evolution is folded in
+    * once, on append, driver-side). */
+  private def ensure(name: String): TableState = {
+    val (ns, t) = LakeMeta.nameParts(name)
+    new TableState(warehouseDir, name, TableCommit.ensureTable(warehouseDir, ns, t))
   }
-
-  private def snapshotLogPath(name: String) =
-    LakeMeta.snapshotLogPath(warehouseDir, name)
-
-  private def schemaPath(name: String) =
-    LakeMeta.schemaPath(warehouseDir, name)
-
-  /** Schema sidecar: the table's full READ schema (data columns then
-    * hidden partition columns), recorded at WRITE time so reads never
-    * pay a footer-merge job. At 100 TB `mergeSchema=true` per read is a
-    * scan-all-footers-per-query design — exactly the planning cost
-    * Iceberg's metadata layer exists to avoid; this sidecar is the
-    * emulation of that metadata (schema evolution is folded in once,
-    * on append, driver-side). */
-  private def saveSchema(name: String, schema: StructType): Unit = {
-    val p = schemaPath(name)
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, schema.json.getBytes("UTF-8"))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def savedSchema(name: String): Option[StructType] =
-    LakeMeta.savedSchema(warehouseDir, name)
 
   /** Driver-side row count from the written parquet footers — a pure
     * metadata read (no Spark job, no task scheduling, no output-commit
@@ -130,8 +111,6 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     try stream.findFirst().isPresent finally stream.close()
   }
 
-  private val commitCol = LakeMeta.CommitCol
-
   /** W3 — atomic-enough append partitioned by day of `partitionTs`
     * (single-writer discipline, SURVEY §7.4), one snapshot per commit.
     * Each commit writes under its own `commit=<id>` partition
@@ -153,25 +132,22 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * the batch. See [[graft.streaming.EventStreams.priceStreamToLake]]
     * — the streaming sink this closes the r14 Next #6 gap for. */
   def appendExactlyOnce(name: String, df: DataFrame, batchId: Long,
-      partitionTs: Option[String] = None): Boolean = {
-    if (LakeMeta.batchApplied(warehouseDir, name, batchId)) return false
+      partitionTs: Option[String] = None): Boolean =
     appendCommit(name, df, partitionTs, batchId = Some(batchId))
-    true
-  }
 
   /** Shared append body: stage the commit's files into a dot-prefixed
     * sibling, promote with ONE atomic directory rename, then log. A
     * crash mid-write leaves invisible staging residue; a crash between
-    * rename and log leaves an unlogged `commit=N` dir that the next
-    * append for the same id (the log line count is unchanged) deletes
-    * before promoting its own — so a commit is visible to snapshot
-    * queries exactly when its log line exists. */
+    * rename and log leaves an unlogged `commit=N` dir that no read
+    * serves and the next commit for the same id (the log line count is
+    * unchanged) deletes — so a commit is visible exactly when its log
+    * line exists. False iff `batchId` was already applied. */
   private def appendCommit(name: String, df: DataFrame,
-      partitionTs: Option[String], batchId: Option[Long]): Unit = {
-    val dataRoot = ensureTable(name)
-    val id = nextSnapshotId(name)
-    val commitPath = dataRoot.resolve(s"$commitCol=$id")
-    val stage = dataRoot.resolve(
+      partitionTs: Option[String], batchId: Option[Long]): Boolean = {
+    val st = ensure(name)
+    if (batchId.exists(st.batchApplied)) return false
+    val commitPath = st.nextCommit()
+    val stage = st.dir.resolve(
       s".append_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
     val writer = partitionTs match {
       case Some(ts) =>
@@ -180,16 +156,15 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       case None => df.write
     }
     writer.mode(SaveMode.Overwrite).parquet(stage.toString)
-    if (Files.exists(commitPath)) deleteRecursive(commitPath)
     Files.move(stage, commitPath)
     // Fold this commit's schema into the sidecar (add-column evolution
     // happens HERE, once, driver-side — not on every read).
-    saveSchema(name, appendReadSchema(name, df.schema, partitionTs))
+    st.saveSchema(appendReadSchema(st, df.schema, partitionTs))
     // Row count for the snapshot log comes from the WRITTEN parquet
     // footers (a driver-side metadata read) — counting the input df
     // would execute its whole plan a second time per commit.
-    logSnapshot(name, "append", parquetRowCount(commitPath.toString), id,
-      batchId)
+    st.appendLog("append", parquetRowCount(commitPath.toString), batchId)
+    true
   }
 
   /** The read schema after an append of `incoming` data columns:
@@ -199,17 +174,17 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * order: outer `commit` dir, then the day dir). Type changes on an
     * existing column are rejected loudly — this emulation supports
     * add-column evolution only. */
-  private def appendReadSchema(name: String, incoming: StructType,
+  private def appendReadSchema(st: TableState, incoming: StructType,
                                partitionTs: Option[String]): StructType = {
     val newData = incoming.fields.map(_.copy(nullable = true)).toSeq
-    val data = savedSchema(name) match {
+    val data = st.schema match {
       case None => newData
       case Some(old) =>
         val oldData = old.fields.filterNot(f => hiddenCol(f.name)).toSeq
         val oldNames = oldData.map(_.name).toSet
         for (f <- oldData; nf <- newData.find(_.name == f.name))
           require(nf.dataType == f.dataType,
-            s"$name column ${f.name} type changed " +
+            s"${st.name} column ${f.name} type changed " +
               s"(${f.dataType.catalogString} -> ${nf.dataType.catalogString}); " +
               "only add-column evolution is supported")
         oldData ++ newData.filterNot(f => oldNames(f.name))
@@ -220,11 +195,11 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     // sidecar would lose the day column on later reads — breaking
     // HiddenPartitionPruning — because user-specified read schemas
     // omit undeclared partition columns).
-    val savedHidden = savedSchema(name).toSeq
-      .flatMap(_.fields.filter(f => hiddenCol(f.name) && f.name != commitCol))
+    val savedHidden = st.schema.toSeq
+      .flatMap(_.fields.filter(f => hiddenCol(f.name) && f.name != CommitCol))
     val currentHidden =
       partitionTs.map(ts => StructField(partitionColFor(ts), DateType)).toSeq
-    val hidden = StructField(commitCol, LongType) +:
+    val hidden = StructField(CommitCol, LongType) +:
       (savedHidden ++ currentHidden.filterNot(f =>
         savedHidden.exists(_.name == f.name)))
     StructType(data ++ hidden)
@@ -241,30 +216,19 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * (including its own history entry) and a crash at any point leaves
     * fully-old or fully-new, never a mix. */
   def createOrReplace(name: String, df: DataFrame): Unit = {
-    val path = Paths.get(tablePath(name))
+    val (ns, t) = LakeMeta.nameParts(name)
     // dot-prefixed namespace-level sibling: invisible to listings AND
     // to parquet scans while being written
-    val tmp = path.resolveSibling(
-      ".__ctas_tmp_" + java.util.UUID.randomUUID().toString.replace("-", "") +
-        "_" + path.getFileName)
+    val tmp = Paths.get(warehouseDir, ns,
+      ".__ctas_tmp_" + java.util.UUID.randomUUID().toString.replace("-", "") + "_" + t)
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     // footer metadata count of the written files, not a second plan run
     val rows = parquetRowCount(tmp.toString)
-    val meta = tmp.resolve(LakeMeta.MetaDirName)
-    Files.createDirectories(meta)
-    Files.write(meta.resolve("schema.json"),
-      StructType(df.schema.fields.map(_.copy(nullable = true)))
-        .json.getBytes("UTF-8"))
-    val parts = name.split('.')
-    TableCommit.commitGeneration(warehouseDir, parts(0), parts(1), tmp,
-      logEntry = Some(("replace", rows)))
+    new TableState(warehouseDir, name, tmp)
+      .saveSchema(StructType(df.schema.fields.map(_.copy(nullable = true))))
+    TableCommit.commitGeneration(warehouseDir, ns, t, tmp, logEntry = Some(("replace", rows)))
   }
 
-  /** S5 — table scan by multi-part name. The physical partition
-    * columns (`commit`, `graft_days_*`) are dropped so readers see the
-    * declared logical schema (hidden partitioning emulation, SURVEY
-    * §1.4); partition pruning on them still applies underneath (see
-    * graft.plans.HiddenPartitionPruning for the ts→date rewrite). */
   /** Reads use the sidecar schema recorded at write time — no
     * footer-merge job per read. Add-column evolution still works:
     * commits written before a column existed surface it as NULL (the
@@ -272,32 +236,24 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * mergeSchema footer scan survives only as the REPAIR path for a
     * warehouse with no sidecar (e.g. produced by an older build); its
     * result is then saved so the cost is paid at most once. */
-  private def readTable(name: String): DataFrame = {
-    // resolve the generation pointer ONCE: every path this frame scans
-    // belongs to one generation — snapshot-isolated, no rename window
-    val data = dataPath(name)
-    oneSplit(savedSchema(name) match {
-      case Some(sc) => readData(spark.read.schema(sc), data)
-      case None =>
-        val df = readData(spark.read.option("mergeSchema", "true"), data)
-        saveSchema(name, df.schema)
-        df
-    })
-  }
+  private def read(st: TableState): DataFrame = oneSplit(st.schema match {
+    case Some(sc) => readData(spark.read.schema(sc), st)
+    case None =>
+      val df = readData(spark.read.option("mergeSchema", "true"), st)
+      st.saveSchema(df.schema)
+      df
+  })
 
-  /** Reads a data dir through its listed children, with the dir itself
-    * as `basePath` (partition discovery is unchanged). Handed the dir,
-    * Spark logs "All paths were ignored" for every read of a
-    * dot-prefixed generation. A dir with no listed child reads as
-    * empty, as the dir itself did; a missing dir fails as before. */
-  private def readData(r: DataFrameReader, dir: String): DataFrame = {
-    if (!Files.isDirectory(Paths.get(dir))) return r.parquet(dir)
-    import scala.jdk.CollectionConverters._
-    val stream = Files.list(Paths.get(dir))
-    val children = try stream.iterator().asScala.map(_.getFileName.toString)
-      .filter(graft.Tables.listed).toSeq.sorted.map(c => s"$dir/$c")
-    finally stream.close()
-    r.option("basePath", dir).parquet(children: _*)
+  /** Reads a data dir through its served children
+    * ([[TableState.readable]]), with the dir itself as `basePath`
+    * (partition discovery is unchanged). Handed the dir, Spark logs
+    * "All paths were ignored" for every read of a dot-prefixed
+    * generation. A dir with no listed child reads as empty, as the dir
+    * itself did; a missing dir fails as before. */
+  private def readData(r: DataFrameReader, st: TableState): DataFrame = {
+    val dir = st.dir.toString
+    if (!Files.isDirectory(st.dir)) r.parquet(dir)
+    else r.option("basePath", dir).parquet(st.readable.map(c => s"$dir/$c"): _*)
   }
 
   /** A read of exactly one file that fits one split, as one partition.
@@ -318,13 +274,15 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     if (single) df.coalesce(1) else df
   }
 
-  def table(name: String): DataFrame = {
-    val df = readTable(name)
-    df.drop(df.columns.filter(hiddenCol).toSeq: _*)
-  }
+  /** S5 — table scan by multi-part name. The physical partition
+    * columns (`commit`, `graft_days_*`) are dropped so readers see the
+    * declared logical schema (hidden partitioning emulation, SURVEY
+    * §1.4); partition pruning on them still applies underneath (see
+    * graft.plans.HiddenPartitionPruning for the ts→date rewrite). */
+  def table(name: String): DataFrame = visible(read(resolve(name)))
 
-  private def hiddenCol(c: String): Boolean =
-    c == commitCol || c.startsWith(graft.plans.HiddenPartitionPruning.Prefix)
+  private def visible(df: DataFrame): DataFrame =
+    df.drop(df.columns.filter(hiddenCol).toSeq: _*)
 
   /** Time travel: the table as of `snapshotId` (inclusive) — every
     * append commit up to that snapshot. The filter on the `commit`
@@ -334,15 +292,12 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * replacements — their history is the latest state only, so time
     * travel applies to append tables (matching the reference, where
     * only raw accumulates snapshots hourly). */
-  def tableAsOf(name: String, snapshotId: Long): DataFrame = {
-    val df = readTable(name)
-    require(df.columns.contains(commitCol),
-      s"$name has no commit history (CTAS tables hold only their latest state)")
-    require(snapshotId >= rewriteFloor(name),
-      s"$name snapshot $snapshotId predates the last compaction " +
-        s"(rewrite snapshot ${rewriteFloor(name)}) — its files were folded away")
-    val filtered = df.filter(col(commitCol) <= snapshotId)
-    filtered.drop(df.columns.filter(hiddenCol).toSeq: _*)
+  def tableAsOf(name: String, snapshotId: Long): DataFrame =
+    asOf(resolve(name), snapshotId)
+
+  private def asOf(st: TableState, snapshotId: Long): DataFrame = {
+    st.requireTravel(snapshotId)
+    visible(read(st).filter(col(CommitCol) <= snapshotId))
   }
 
   /** Keyed upsert (the MERGE INTO … WHEN MATCHED UPDATE / WHEN NOT
@@ -379,8 +334,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     // preserve the table's hidden day partitioning: recover the source
     // timestamp column from the schema sidecar so the merged commit
     // lands day-partitioned like every other commit
-    val partTs = LakeMeta.partitionTsOf(warehouseDir, name)
-      .filter(batch.columns.contains)
+    val partTs = resolve(name).partitionTs.filter(batch.columns.contains)
     append(name, batch, partitionTs = partTs)
     (replaced, inserted)
   }
@@ -398,40 +352,22 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * re-run completes the rollback; leftover retired dirs are hidden
     * from readers and swept on entry. */
   def rollbackTo(name: String, snapshotId: Long): Long = {
-    recoverDeletes(name)
-    val df = readTable(name)
-    require(df.columns.contains(commitCol),
-      s"$name has no commit history (CTAS tables hold only their latest state)")
-    require(snapshotId >= rewriteFloor(name),
-      s"$name snapshot $snapshotId predates the last compaction " +
-        s"(rewrite snapshot ${rewriteFloor(name)}) — its files were folded away")
+    val st = resolve(name)
+    recover(st)
+    st.requireTravel(snapshotId)
     // sweep retired dirs from a previously-crashed rollback
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(dataPath(name))
-    val st0 = Files.list(root)
-    try st0.iterator().asScala.toList
-      .filter(_.getFileName.toString.startsWith(".rollback_old_"))
-      .foreach(deleteRecursive)
-    finally st0.close()
-    val st = Files.list(root)
-    val doomed = try st.iterator().asScala.toList
-      .filter { p =>
-        val n0 = p.getFileName.toString
-        n0.startsWith(s"$commitCol=") &&
-          n0.substring(commitCol.length + 1).toLong > snapshotId
-      }
-      .sortBy(p => -p.getFileName.toString.substring(commitCol.length + 1).toLong)
-    finally st.close()
+    LakeMeta.childNames(st.dir).filter(_.startsWith(".rollback_old_"))
+      .foreach(n => deleteRecursive(st.dir.resolve(n)))
+    val doomed = st.commits.filter(_._1 > snapshotId).reverse
     if (doomed.isEmpty) return 0L
-    var removed = 0L
-    doomed.foreach { commitDir =>
-      removed += parquetRowCount(commitDir.toString)
-      val retired = Paths.get(
-        s"${dataPath(name)}/.rollback_old_${commitDir.getFileName}")
-      Files.move(commitDir, retired) // atomic retire — readers skip dot-dirs
-      deleteRecursive(retired)       // purge
-    }
-    logSnapshot(name, "rollback", -removed)
+    val removed = doomed.map { case (_, c) =>
+      val rows = parquetRowCount(st.dir.resolve(c).toString)
+      val retired = st.dir.resolve(s".rollback_old_$c")
+      Files.move(st.dir.resolve(c), retired) // atomic retire — readers skip dot-dirs
+      deleteRecursive(retired)               // purge
+      rows
+    }.sum
+    st.appendLog("rollback", -removed)
     removed
   }
 
@@ -451,7 +387,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
   def cloneTable(src: String, dst: String): Long = {
     require(tableExists(src), s"clone source $src does not exist")
     require(src != dst, "clone source and destination must differ")
-    val srcRoot = Paths.get(dataPath(src))
+    val srcRoot = resolve(src).dir
     val dstContainer = Paths.get(tablePath(dst))
     if (Files.exists(dstContainer)) deleteRecursive(dstContainer)
     // the clone is built as a complete hidden GENERATION; the pointer
@@ -464,30 +400,21 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     var linked = 0L
     val stream = Files.walk(srcRoot)
     try stream.forEach { p =>
-      val rel = srcRoot.relativize(p).toString
+      val q = dstRoot.resolve(srcRoot.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(q)
       // sidecars must be COPIED, never hard-linked: the snapshot log is
       // APPENDED in place, so a linked inode would leak one side's
-      // commits into the other (the verbatim copy loop below owns them)
-      if (!(rel == LakeMeta.MetaDirName ||
-            rel.startsWith(LakeMeta.MetaDirName + "/"))) {
-        val q = dstRoot.resolve(srcRoot.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(q)
-        else {
-          Files.createDirectories(q.getParent)
-          try { Files.createLink(q, p); linked += 1 }
-          catch {
-            case _: UnsupportedOperationException |
-                 _: java.nio.file.FileSystemException =>
-              Files.copy(p, q); linked += 1
-          }
+      // commits into the other
+      else if (srcRoot.relativize(p).startsWith(LakeMeta.MetaDirName)) Files.copy(p, q)
+      else {
+        try Files.createLink(q, p)
+        catch {
+          case _: UnsupportedOperationException |
+               _: java.nio.file.FileSystemException => Files.copy(p, q)
         }
+        linked += 1
       }
     } finally stream.close()
-    val dstMeta = dstRoot.resolve(LakeMeta.MetaDirName)
-    Files.createDirectories(dstMeta)
-    Seq(snapshotLogPath(src), schemaPath(src), tagsPath(src)).foreach { a =>
-      if (Files.exists(a)) Files.copy(a, dstMeta.resolve(a.getFileName))
-    }
     TableCommit.publishPointer(dstContainer, genName)
     linked
   }
@@ -495,7 +422,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
   /** S6 — the `table.snapshots` metadata scan (reference README.md:301):
     * one row per commit with Iceberg-shaped columns. */
   def snapshots(name: String): DataFrame = {
-    val p = snapshotLogPath(name)
+    val p = resolve(name).logPath
     val schema = StructType(Seq(
       StructField("committed_at", TimestampType),
       StructField("snapshot_id", LongType),
@@ -514,7 +441,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * already encodes (so the aggregate is shuffle-light: partition
     * values are constant within each input split). */
   def partitions(name: String): DataFrame = {
-    val df = readTable(name)
+    val df = read(resolve(name))
     val partCols = df.columns.filter(hiddenCol).toSeq
     require(partCols.nonEmpty,
       s"$name is unpartitioned (CTAS tables have no partitions metadata)")
@@ -522,9 +449,6 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       .agg(count(lit(1)).as("record_count"))
       .orderBy(partCols.map(col): _*)
   }
-
-  private def tagsPath(name: String) =
-    LakeMeta.tagsPath(warehouseDir, name)
 
   /** Iceberg tags: a NAMED immutable reference to a snapshot
     * (`CREATE TAG v1 AS OF VERSION n`). Tags pin releases — "the mart
@@ -534,28 +458,21 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * Iceberg keeps tagged snapshots alive instead, which needs the
     * file-manifest layer this emulation trades away). */
   def tagSnapshot(name: String, tag: String, snapshotId: Long): Unit = {
-    require(snapshotId >= 1 && snapshotId <= currentSnapshotId(name),
+    val st = resolve(name)
+    require(snapshotId >= 1 && snapshotId <= st.currentSnapshotId,
       s"cannot tag snapshot $snapshotId of $name " +
-        s"(table is at ${currentSnapshotId(name)})")
-    val p = tagsPath(name)
-    Files.createDirectories(p.getParent)
-    val tags = readTags(name) + (tag -> snapshotId)
-    val json = tags.map { case (k, v) =>
-      s""""${k.replace("\"", "")}":$v""" }.mkString("{", ",", "}")
-    Files.write(p, json.getBytes("UTF-8"))
+        s"(table is at ${st.currentSnapshotId})")
+    st.saveTags(st.tags + (tag -> snapshotId))
   }
 
-  def tags(name: String): Map[String, Long] = readTags(name)
+  def tags(name: String): Map[String, Long] = resolve(name).tags
 
   /** The table as of the TAGGED snapshot. */
   def tableAtTag(name: String, tag: String): DataFrame = {
-    val id = readTags(name).getOrElse(tag,
-      throw new IllegalArgumentException(s"no tag '$tag' on $name"))
-    tableAsOf(name, id)
+    val st = resolve(name)
+    asOf(st, st.tags.getOrElse(tag,
+      throw new IllegalArgumentException(s"no tag '$tag' on $name")))
   }
-
-  private def readTags(name: String): Map[String, Long] =
-    LakeMeta.readTags(warehouseDir, name)
 
   /** Iceberg's `expire_snapshots` analog: fence off time travel below
     * `olderThan`. In this emulation every commit's files are still
@@ -567,27 +484,12 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * carrying its OWN fence value (the entry's snapshot id keeps
     * counting commits). Returns the new floor. */
   def expireSnapshots(name: String, olderThan: Long): Long = {
-    val current = currentSnapshotId(name)
-    require(olderThan <= current,
-      s"cannot expire up to $olderThan: table $name is at snapshot $current")
-    if (olderThan > rewriteFloor(name)) {
-      val p = snapshotLogPath(name)
-      Files.createDirectories(p.getParent)
-      val id = nextSnapshotId(name)
-      val ts = java.time.Instant.now().toString
-      val line = s"""{"committed_at":"$ts","snapshot_id":$id,""" +
-        s""""operation":"expire","added_records":0,"fence":$olderThan}\n"""
-      Files.write(p, line.getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    }
-    rewriteFloor(name)
-  }
-
-  private def nextSnapshotId(name: String): Long = {
-    val p = snapshotLogPath(name)
-    if (!Files.exists(p)) return 1L
-    val lines = Files.lines(p)
-    try lines.count() + 1 finally lines.close()
+    val st = resolve(name)
+    require(olderThan <= st.currentSnapshotId,
+      s"cannot expire up to $olderThan: table $name is at snapshot ${st.currentSnapshotId}")
+    val floor = st.rewriteFloor
+    if (olderThan > floor) st.appendLog("expire", 0L, fence = Some(olderThan))
+    math.max(floor, olderThan)
   }
 
   /** MERGE (upsert) by key: rows in `updates` replace same-key rows in
@@ -607,12 +509,11 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     // time travel AND leave a mixed root-files/commit=N layout a later
     // append() would corrupt — so MERGE is restricted to CTAS tables,
     // mirroring the tableAsOf guard in the opposite direction.
-    val rawCols = savedSchema(name).map(_.fieldNames.toSeq)
-      .getOrElse(spark.read.parquet(dataPath(name)).columns.toSeq)
-    require(!rawCols.contains(commitCol),
+    val st = resolve(name)
+    require(!st.hasHistory,
       s"mergeInto target $name has append/commit history; MERGE is " +
       "copy-on-write over CTAS tables only (append history would be lost)")
-    val current = table(name)
+    val current = visible(read(st))
     val kept = current.join(updates.select(keys.map(col): _*), keys, "left_anti")
     createOrReplace(name, kept.unionByName(updates))
   }
@@ -634,16 +535,15 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * `predicate` ranges over user-visible columns only. Returns the
     * number of rows deleted. */
   def deleteWhere(name: String, predicate: org.apache.spark.sql.Column): Long = {
-    recoverDeletes(name) // roll forward any crashed prior rewrite first
-    val current = table(name)
+    val st = resolve(name)
+    recover(st) // roll forward any crashed prior rewrite first
     // three-valued logic: a NULL predicate must mean KEEP, not delete —
     // filter(p) && filter(!p) would silently drop NULL-evaluating rows
     // from BOTH sides (deleted by neither count nor retention)
     val doomed = coalesce(predicate, lit(false))
     val keep = !doomed
-    val rawCols = savedSchema(name).map(_.fieldNames.toSeq)
-      .getOrElse(spark.read.parquet(dataPath(name)).columns.toSeq)
-    if (!rawCols.contains(commitCol)) {
+    if (!st.hasHistory) {
+      val current = visible(read(st))
       val nDel = current.filter(doomed).count()
       if (nDel == 0L) return 0L
       createOrReplace(name, current.filter(keep))
@@ -651,33 +551,33 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     } else {
       // ONE pass yields both the deletion count and the affected
       // commit list (the commit-keyed aggregate is snapshot-bounded);
-      // reading through readTable's sidecar schema means a predicate
+      // reading through the sidecar schema means a predicate
       // on a LATER-added column resolves against every commit (old
       // commits surface it as NULL → keep, never AnalysisException).
-      val raw = readTable(name)
+      val raw = read(st)
       val perCommit = raw.filter(doomed)
-        .groupBy(col(commitCol).cast("long").as("cid"))
+        .groupBy(col(CommitCol).cast("long").as("cid"))
         .agg(count(lit(1)).as("n")).collect()
       val nDel = perCommit.map(_.getAs[Long]("n")).sum
       if (nDel == 0L) return 0L
       val affected = perCommit.map(_.getAs[Long]("cid")).sorted
       val partCols = raw.columns.filter(c =>
-        hiddenCol(c) && c != commitCol).toSeq
+        hiddenCol(c) && c != CommitCol).toSeq
       // Crash safety: every crash point leaves the commit's rows
       // discoverable in exactly one of {commitDir, .delete_old (the
       // pre-delete contents), .delete_tmp (the complete post-delete
       // contents — written FULLY before the old dir moves aside)}.
       // [[recoverDeletes]] (run above, and callable standalone) rolls
-      // any interrupted commit forward; a crash between retire and
-      // promote hides that one commit from readers until recovery, but
-      // never loses its kept rows.
+      // any interrupted commit forward. Until it has, reads of the
+      // table refuse (TableState.readable) rather than miss a commit;
+      // readers concurrent with this loop are refused the same way.
       var remaining = 0L
       affected.foreach { cid =>
-        val commitDir = Paths.get(s"${dataPath(name)}/$commitCol=$cid")
-        val kept = raw.filter(col(commitCol) === cid).filter(keep)
-          .drop(commitCol)
-        val tmp = Paths.get(s"${dataPath(name)}/.delete_tmp_$cid")
-        val retired = Paths.get(s"${dataPath(name)}/.delete_old_$cid")
+        val commitDir = st.dir.resolve(s"$CommitCol=$cid")
+        val kept = raw.filter(col(CommitCol) === cid).filter(keep)
+          .drop(CommitCol)
+        val tmp = st.dir.resolve(s".delete_tmp_$cid")
+        val retired = st.dir.resolve(s".delete_old_$cid")
         val writer = if (partCols.nonEmpty) kept.write.partitionBy(partCols: _*)
           else kept.write
         writer.mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -686,7 +586,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
         Files.move(tmp, commitDir)     // promote
         deleteRecursive(retired)       // purge the old contents last
       }
-      logSnapshot(name, "rewrite", remaining)
+      st.appendLog("rewrite", remaining)
       nDel
     }
   }
@@ -702,22 +602,22 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     *    it, then purge the retired dir;
     *  - `.delete_tmp` alone → crash mid-write: the commit dir is
     *    untouched, drop the partial tmp.
-    * Idempotent; called at the head of [[deleteWhere]] and safe to run
-    * any time under the same single-writer discipline as append. */
-  def recoverDeletes(name: String): Unit = {
-    val root = Paths.get(dataPath(name))
-    if (!Files.exists(root)) return
-    import scala.jdk.CollectionConverters._
-    val entries = Files.list(root)
-    val names = try entries.iterator().asScala.map(_.getFileName.toString).toList
-      finally entries.close()
+    * Idempotent; called at the head of [[deleteWhere]] and
+    * [[rollbackTo]], and safe to run any time under the same
+    * single-writer discipline as append. Reads refuse a table in any of
+    * these states until it has run. */
+  def recoverDeletes(name: String): Unit = recover(resolve(name))
+
+  private def recover(st: TableState): Unit = {
+    val root = st.dir
+    val names = LakeMeta.childNames(root)
     names.filter(_.startsWith(".delete_old_")).foreach { oldName =>
       val cid = oldName.stripPrefix(".delete_old_")
-      val commitDir = root.resolve(s"$commitCol=$cid")
+      val commitDir = root.resolve(s"$CommitCol=$cid")
       val tmp = root.resolve(s".delete_tmp_$cid")
       if (!Files.exists(commitDir)) {
         require(Files.exists(tmp),
-          s"$name commit $cid: retired dir without tmp or commit — " +
+          s"${st.name} commit $cid: retired dir without tmp or commit — " +
             "protocol invariant broken, manual repair needed")
         Files.move(tmp, commitDir)
       }
@@ -725,7 +625,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     }
     names.filter(_.startsWith(".delete_tmp_")).foreach { tmpName =>
       val cid = tmpName.stripPrefix(".delete_tmp_")
-      if (Files.exists(root.resolve(s"$commitCol=$cid")))
+      if (Files.exists(root.resolve(s"$CommitCol=$cid")))
         deleteRecursive(root.resolve(tmpName))
     }
   }
@@ -734,18 +634,13 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * feed an incremental transform consumes. Commit-partition pruned
     * like tableAsOf. */
   def tableSince(name: String, snapshotId: Long): DataFrame = {
-    val df = readTable(name)
-    require(df.columns.contains(commitCol),
-      s"$name has no commit history (CTAS tables hold only their latest state)")
-    require(snapshotId >= rewriteFloor(name),
-      s"$name change feed from $snapshotId predates the last compaction " +
-        s"(rewrite snapshot ${rewriteFloor(name)}) — deltas were folded away")
-    df.filter(col(commitCol) > snapshotId)
-      .drop(df.columns.filter(hiddenCol).toSeq: _*)
+    val st = resolve(name)
+    st.requireTravel(snapshotId)
+    visible(read(st).filter(col(CommitCol) > snapshotId))
   }
 
   /** Latest snapshot id of an append table (0 when empty). */
-  def currentSnapshotId(name: String): Long = nextSnapshotId(name) - 1
+  def currentSnapshotId(name: String): Long = resolve(name).currentSnapshotId
 
   /** The `table.files` metadata scan (the Iceberg `files` table
     * analog, completing the metadata family beside [[snapshots]] and
@@ -756,38 +651,37 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * directory walk + parquet footers, no executor job, no data read
     * — the same budget class as the snapshot log. */
   def files(name: String): DataFrame = {
-    val root = Paths.get(dataPath(name))
+    val st = resolve(name)
     val schema = StructType(Seq(
       StructField("file_path", StringType),
       StructField("commit", LongType),
       StructField("partition_day", StringType),
       StructField("file_size_bytes", LongType),
       StructField("record_count", LongType)))
-    if (!Files.exists(root)) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val conf = spark.sessionState.newHadoopConf()
     import scala.jdk.CollectionConverters._
-    val stream = Files.walk(root)
-    val rows = try stream.iterator().asScala
-      .filter { f =>
-        val rel = root.relativize(f).toString
-        f.getFileName.toString.endsWith(".parquet") &&
-          !rel.split('/').exists(seg =>
-            seg.startsWith(".") || seg.startsWith("_"))
-      }
-      .map { f =>
-        val rel = root.relativize(f).toString
-        val segs = rel.split('/').toSeq
-        def partVal(prefix: String): Option[String] = segs.collectFirst {
-          case seg if seg.startsWith(prefix) && seg.contains("=") =>
-            seg.substring(seg.indexOf('=') + 1)
+    val rows = st.readable.flatMap { c =>
+      val stream = Files.walk(st.dir.resolve(c))
+      try stream.iterator().asScala
+        .filter { f =>
+          val rel = st.dir.relativize(f).toString
+          f.getFileName.toString.endsWith(".parquet") &&
+            !rel.split('/').exists(seg =>
+              seg.startsWith(".") || seg.startsWith("_"))
         }
-        org.apache.spark.sql.Row(rel,
-          partVal(commitCol + "=").map(_.toLong).getOrElse(0L),
-          partVal(graft.plans.HiddenPartitionPruning.Prefix).orNull,
-          Files.size(f), footerRowCount(f, conf))
-      }.toList
-    finally stream.close()
+        .map { f =>
+          val segs = st.dir.relativize(f).toString.split('/').toSeq
+          def partVal(prefix: String): Option[String] = segs.collectFirst {
+            case seg if seg.startsWith(prefix) && seg.contains("=") =>
+              seg.substring(seg.indexOf('=') + 1)
+          }
+          org.apache.spark.sql.Row(segs.mkString("/"),
+            segs.flatMap(LakeMeta.commitId).headOption.getOrElse(0L),
+            partVal(graft.plans.HiddenPartitionPruning.Prefix).orNull,
+            Files.size(f), footerRowCount(f, conf))
+        }.toList
+      finally stream.close()
+    }
     spark.createDataFrame(rows.asJava, schema)
       .orderBy(col("commit"), col("file_path"))
   }
@@ -853,22 +747,13 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     table(name).createOrReplaceTempView(vn)
     graft.plans.TimeTravel.register(vn, graft.plans.TimeTravel.Target(
       v => tableAsOf(name, v),
-      inst => tableAsOf(name, snapshotIdAt(name, inst))))
+      inst => { val st = resolve(name); asOf(st, st.snapshotIdAt(inst)) }))
   }
 
-  /** Latest snapshot id committed at or before `inst` (metadata-only:
-    * one pass over the jsonl snapshot log). */
-  def snapshotIdAt(name: String, inst: java.time.Instant): Long = {
-    val rows = snapshots(name)
-      .filter(col("committed_at") <=
-        lit(java.sql.Timestamp.from(inst)))
-      .agg(max(col("snapshot_id")).as("sid")).collect()
-    val sid = if (rows.isEmpty || rows(0).isNullAt(0)) -1L
-      else rows(0).getLong(0)
-    require(sid >= 1L,
-      s"$name has no snapshot committed at or before $inst")
-    sid
-  }
+  /** Latest snapshot id committed at or before `inst` — a driver-side
+    * read of the parsed log, no Spark job. */
+  def snapshotIdAt(name: String, inst: java.time.Instant): Long =
+    resolve(name).snapshotIdAt(inst)
 
   /** Row-level diff between two snapshots: what a reader at `to` sees
     * that a reader at `from` did not (`added`) and vice versa
@@ -884,8 +769,9 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * [[tableSince]], which is partition-pruned instead of comparing
     * content. */
   def diffSnapshots(name: String, from: Long, to: Long): DataFrame = {
-    val a = tableAsOf(name, from)
-    val b = tableAsOf(name, to)
+    val st = resolve(name)
+    val a = asOf(st, from)
+    val b = asOf(st, to)
     b.exceptAll(a).withColumn("change", lit("added"))
       .unionByName(a.exceptAll(b).withColumn("change", lit("removed")))
   }
@@ -898,39 +784,30 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * at 100 TB this action is what keeps file counts (and scan
     * planning time) bounded. Time travel to snapshots BEFORE the
     * rewrite is no longer possible (their files are gone) and is
-    * guarded in tableAsOf. Single-writer discipline, like append: a
-    * crash between write and delete leaves duplicate rows that the
-    * next compact would fold again — acceptable for the emulation
-    * (real Iceberg gets atomicity from its metadata swap). */
+    * guarded in tableAsOf. Single-writer discipline, like append. The
+    * log line is the commit point, so it is written before the old
+    * dirs go: a crash before it leaves the new dir unlogged (never
+    * served, dropped by the next commit), and a crash between it and
+    * the deletes leaves duplicate rows that the next compact would
+    * fold again — acceptable for the emulation (real Iceberg gets
+    * atomicity from its metadata swap). */
   def compact(name: String): Unit = {
-    val path = dataPath(name)
-    val raw = readTable(name)
-    require(raw.columns.contains(commitCol),
-      s"$name has no commit history (compact applies to append tables)")
-    val oldCommits = {
-      import scala.jdk.CollectionConverters._
-      val stream = Files.list(Paths.get(path))
-      try stream.iterator().asScala.toSeq
-        .filter(_.getFileName.toString.startsWith(s"$commitCol="))
-      finally stream.close()
-    }
-    val id = nextSnapshotId(name)
+    val st = resolve(name)
+    st.requireHistory()
+    val raw = read(st)
+    val oldCommits = st.commits.map(c => st.dir.resolve(c._2))
+    val target = st.nextCommit()
     val partCols = raw.columns
       .filter(_.startsWith(graft.plans.HiddenPartitionPruning.Prefix)).toSeq
-    val data = raw.drop(commitCol)
+    val data = raw.drop(CommitCol)
     val writer =
       if (partCols.nonEmpty) data.write.partitionBy(partCols: _*) else data.write
     // the write executes against the file index captured above, so it
     // reads only the pre-existing commit dirs
-    writer.mode(SaveMode.Append).parquet(s"$path/$commitCol=$id")
+    writer.mode(SaveMode.Append).parquet(target.toString)
+    st.appendLog("rewrite", parquetRowCount(target.toString))
     oldCommits.foreach(deleteRecursive)
-    logSnapshot(name, "rewrite", parquetRowCount(s"$path/$commitCol=$id"), id)
   }
-
-  /** Highest `rewrite` snapshot id (0 if never compacted): snapshots
-    * below it were physically folded together and cannot be read. */
-  private def rewriteFloor(name: String): Long =
-    LakeMeta.rewriteFloor(warehouseDir, name)
 
   /** Partition-scoped overwrite: replaces ONLY the partitions present
     * in `df` (dynamic partition overwrite), leaving every other
@@ -939,7 +816,8 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * (the mart's own grain column), unlike the hidden day-partitions of
     * append tables. One snapshot logged per call. */
   def overwritePartitions(name: String, df: DataFrame, partitionCol: String): Unit = {
-    val path = ensureTable(name).toString
+    val st = ensure(name)
+    val path = st.dir.toString
     df.write
       .partitionBy(partitionCol)
       .option("partitionOverwriteMode", "dynamic")
@@ -947,10 +825,10 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       .parquet(path)
     val dataFields = df.schema.fields.filterNot(_.name == partitionCol)
       .map(_.copy(nullable = true)).toSeq
-    saveSchema(name, StructType(
+    st.saveSchema(StructType(
       dataFields :+ StructField(partitionCol,
         df.schema(partitionCol).dataType)))
-    logSnapshot(name, "overwrite_partitions", parquetRowCount(path))
+    st.appendLog("overwrite_partitions", parquetRowCount(path))
   }
 
   /** Bucketed table write into the session catalog: co-locates rows by
@@ -1047,33 +925,11 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       Left(spark.createDataFrame(
         java.util.Arrays.asList(reportRows: _*), reportSchema))
     } else {
-      val dataRoot = ensureTable(name)
-      val id = nextSnapshotId(name)
-      val commitPath = dataRoot.resolve(s"$commitCol=$id")
+      val st = ensure(name)
+      val commitPath = st.nextCommit()
       Files.move(staging, commitPath)
-      saveSchema(name, appendReadSchema(name, df.schema, partitionTs))
-      logSnapshot(name, "append_wap", parquetRowCount(commitPath.toString), id)
-      Right(id)
+      st.saveSchema(appendReadSchema(st, df.schema, partitionTs))
+      Right(st.appendLog("append_wap", parquetRowCount(commitPath.toString)))
     }
   }
-
-  private def logSnapshot(name: String, op: String, rows: Long,
-                          snapshotId: Long = -1L,
-                          batchId: Option[Long] = None): Unit = {
-    val p = snapshotLogPath(name)
-    Files.createDirectories(p.getParent)
-    val id = if (snapshotId > 0) snapshotId else nextSnapshotId(name)
-    val ts = java.time.Instant.now().toString
-    val batchField = batchId.map(b => s""","batch_id":$b""").getOrElse("")
-    val line =
-      s"""{"committed_at":"$ts","snapshot_id":$id,"operation":"$op","added_records":$rows$batchField}\n"""
-    Files.write(p, line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
 }

@@ -1,18 +1,22 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.time.Instant
+import java.time.temporal.ChronoUnit
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Warehouse-metadata READ helpers shared by [[LakeCatalog]] (the
-  * in-process facade) and [[graft.sources.GraftLakeSource]] (the
-  * DataSourceV2 path mount): one implementation of the sidecar /
-  * snapshot-log / tags layout so the two read paths can never drift.
+/** Warehouse metadata for both lake read surfaces — [[LakeCatalog]] (the
+  * in-process facade) and [[graft.sources.GraftLakeSource]] /
+  * [[graft.sources.GraftCatalog]] (DataSourceV2) — and for
+  * [[TableCommit]]'s publish: the layout constants, the one pointer
+  * read ([[currentGen]]), the one snapshot-log codec ([[LogEntry]]) and
+  * [[TableState]], the resolved table state every facade and V2
+  * operation reads through. Listing rules, time-travel guards and log
+  * queries exist once, here.
   *
-  * All functions are driver-side metadata reads keyed by
-  * (warehouseDir, namespace.table) — the same signature shape Iceberg's
-  * metadata layer has (catalog location + table identifier). Writes
-  * stay in LakeCatalog: the V2 source is read-only by design (the
-  * reference's writers all run through the pipeline facade).
+  * Keyed by (warehouseDir, namespace.table) — the same signature shape
+  * Iceberg's metadata layer has (catalog location + table identifier).
   */
 private[graft] object LakeMeta {
 
@@ -32,29 +36,6 @@ private[graft] object LakeMeta {
   val SnapshotLogName = "snapshots.jsonl"
   val TagsName = "tags.json"
 
-  /** The table CONTAINER directory `<warehouse>/<ns>/<table>`. Holds
-    * the pointer + generations; never read raw — data lives under
-    * [[dataPath]]. */
-  def tablePath(warehouseDir: String, name: String): String = {
-    val parts = name.split('.')
-    require(parts.length == 2, s"expected namespace.table, got $name")
-    s"$warehouseDir/${parts(0)}/${parts(1)}"
-  }
-
-  /** The current generation's DATA directory: container + the
-    * generation the pointer names. One small-file read; a reader that
-    * captures this path is snapshot-isolated for the retention grace
-    * (the generation dir is immutable-except-appends once current and
-    * survives [[TableCommit.retireGraceMs]] past its retirement).
-    * Falls back to the container itself for a pre-generation legacy
-    * layout (no pointer file). */
-  def dataPath(warehouseDir: String, name: String): String = {
-    val c = tablePath(warehouseDir, name)
-    val p = Paths.get(c, PointerName)
-    if (!Files.exists(p)) c
-    else s"$c/${new String(Files.readAllBytes(p), "UTF-8").trim}"
-  }
-
   /** Metadata sidecars are COLLOCATED inside the generation directory
     * (`<table>/<gen>/_graft_meta/…`) so a generation is one complete
     * self-describing table state: data, schema, snapshot log and tags
@@ -64,126 +45,222 @@ private[graft] object LakeMeta {
     * dir. */
   val MetaDirName = "_graft_meta"
 
-  def metaDir(warehouseDir: String, name: String): Path =
-    Paths.get(dataPath(warehouseDir, name), MetaDirName)
-
-  def snapshotLogPath(warehouseDir: String, name: String): Path =
-    metaDir(warehouseDir, name).resolve(SnapshotLogName)
-
-  def schemaPath(warehouseDir: String, name: String): Path =
-    metaDir(warehouseDir, name).resolve("schema.json")
-
-  def tagsPath(warehouseDir: String, name: String): Path =
-    metaDir(warehouseDir, name).resolve(TagsName)
-
-  /** The table's full READ schema (data columns then hidden partition
-    * columns) recorded at write time — see LakeCatalog.saveSchema. */
-  def savedSchema(warehouseDir: String, name: String): Option[StructType] = {
-    val p = schemaPath(warehouseDir, name)
-    if (!Files.exists(p)) None
-    else Some(DataType.fromJson(
-      new String(Files.readAllBytes(p), "UTF-8")).asInstanceOf[StructType])
+  def nameParts(name: String): (String, String) = name.split('.') match {
+    case Array(ns, t) => (ns, t)
+    case _ => throw new IllegalArgumentException(s"expected namespace.table, got $name")
   }
 
-  def readTags(warehouseDir: String, name: String): Map[String, Long] = {
-    val p = tagsPath(warehouseDir, name)
-    if (!Files.exists(p)) Map.empty
+  /** The table CONTAINER directory `<warehouse>/<ns>/<table>`. Holds
+    * the pointer + generations; never read raw — data lives under
+    * [[TableState.dir]]. */
+  def tablePath(warehouseDir: String, name: String): String = {
+    val (ns, t) = nameParts(name)
+    s"$warehouseDir/$ns/$t"
+  }
+
+  /** The generation the container's pointer names — the only pointer
+    * read. None for a table with no pointer (not yet created, or a
+    * pre-generation legacy layout). */
+  def currentGen(container: Path): Option[String] = {
+    val p = container.resolve(PointerName)
+    if (!Files.exists(p)) None
+    else Some(new String(Files.readAllBytes(p), "UTF-8").trim)
+  }
+
+  /** Resolve `name` once: one pointer read, then everything the
+    * operation needs comes from that generation. A reader that keeps
+    * the state is snapshot-isolated for the retention grace (the
+    * generation dir is immutable-except-appends once current and
+    * survives [[TableCommit.retireGraceMs]] past its retirement). A
+    * legacy layout (no pointer) resolves to the container itself. */
+  def resolve(warehouseDir: String, name: String): TableState = {
+    val c = Paths.get(tablePath(warehouseDir, name))
+    new TableState(warehouseDir, name, currentGen(c).fold(c)(c.resolve))
+  }
+
+  /** The current generation's data directory. */
+  def dataPath(warehouseDir: String, name: String): String =
+    resolve(warehouseDir, name).dir.toString
+
+  /** Physical partition columns readers never see. */
+  def hiddenCol(c: String): Boolean =
+    c == CommitCol || c.startsWith(graft.plans.HiddenPartitionPruning.Prefix)
+
+  /** N of a `commit=N` directory name. */
+  def commitId(dirName: String): Option[Long] =
+    if (dirName.startsWith(CommitCol + "=")) dirName.substring(CommitCol.length + 1).toLongOption
+    else None
+
+  /** Entry names of a directory (empty when it does not exist). */
+  def childNames(dir: Path): List[String] =
+    if (!Files.isDirectory(dir)) Nil
     else {
-      val txt = new String(Files.readAllBytes(p), "UTF-8")
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
+      val st = Files.list(dir)
+      try st.iterator().asScala.map(_.getFileName.toString).toList finally st.close()
+    }
+
+  def deleteRecursive(p: Path): Unit =
+    if (Files.exists(p)) {
+      val st = Files.walk(p)
+      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally st.close()
+    }
+
+  /** One snapshot-log line. `fence` rides `expire` entries (the new
+    * time-travel floor), `batchId` exactly-once appends. */
+  final case class LogEntry(committedAt: String, snapshotId: Long, operation: String,
+      addedRecords: Long, batchId: Option[Long] = None, fence: Option[Long] = None) {
+    def line: String =
+      s"""{"committed_at":"$committedAt","snapshot_id":$snapshotId,""" +
+        s""""operation":"$operation","added_records":$addedRecords""" +
+        batchId.fold("")(b => s""","batch_id":$b""") +
+        fence.fold("")(f => s""","fence":$f""") + "}\n"
+  }
+
+  object LogEntry {
+    private val Field = """"([a-z_]+)":"?([^",}]*)""".r
+
+    def parse(line: String): LogEntry = {
+      val f = Field.findAllMatchIn(line).map(m => m.group(1) -> m.group(2)).toMap
+      def num(k: String) = f.get(k).flatMap(_.toLongOption)
+      LogEntry(f.getOrElse("committed_at", ""), num("snapshot_id").getOrElse(0L),
+        f.getOrElse("operation", ""), num("added_records").getOrElse(0L),
+        num("batch_id"), num("fence"))
     }
   }
 
-  /** The source timestamp column of the table's hidden day
-    * partitioning (None for unpartitioned / CTAS tables): recovered
-    * from the sidecar's `graft_days_<ts>` physical column — the
-    * derivation contract shared by the facade's upsert, the V1 write
-    * seam and the catalog's partitioning report. */
-  def partitionTsOf(warehouseDir: String, name: String): Option[String] =
-    savedSchema(warehouseDir, name).toSeq.flatMap(_.fieldNames)
+  private def readString(p: Path): Option[String] =
+    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), "UTF-8")) else None
+
+  private def writeAtomic(p: Path, s: String): Unit = {
+    Files.createDirectories(p.getParent)
+    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
+    Files.write(tmp, s.getBytes("UTF-8"))
+    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private val TagRe = """"([^"]+)":(\d+)""".r
+
+  /** One generation of a table, as one operation sees it: the data dir
+    * and its sidecars, each read at most once. The schema, tags, log
+    * and listing are read lazily and kept; an operation that writes a
+    * sidecar resolves again to see the change. */
+  final class TableState(val warehouse: String, val name: String, val dir: Path) {
+    val meta: Path = dir.resolve(MetaDirName)
+    def logPath: Path = meta.resolve(SnapshotLogName)
+    def schemaPath: Path = meta.resolve("schema.json")
+    def tagsPath: Path = meta.resolve(TagsName)
+
+    /** The full READ schema (data columns then hidden partition
+      * columns) recorded at write time. */
+    lazy val schema: Option[StructType] =
+      readString(schemaPath).map(DataType.fromJson(_).asInstanceOf[StructType])
+
+    lazy val tags: Map[String, Long] = readString(tagsPath).fold(Map.empty[String, Long])(
+      TagRe.findAllMatchIn(_).map(m => m.group(1) -> m.group(2).toLong).toMap)
+
+    /** The snapshot log, parsed once; entry i has snapshot id i + 1. */
+    lazy val history: Vector[LogEntry] =
+      if (!Files.exists(logPath)) Vector.empty
+      else Files.readAllLines(logPath).asScala.map(LogEntry.parse).toVector
+
+    def currentSnapshotId: Long = history.size.toLong
+
+    def batchApplied(batchId: Long): Boolean = history.exists(_.batchId.contains(batchId))
+
+    def snapshotExists(id: Long): Boolean = history.exists(_.snapshotId == id)
+
+    /** Latest snapshot committed at or before `inst` (Iceberg's
+      * as-of-timestamp semantics). Both sides compare at microseconds,
+      * Spark's timestamp precision: the log records nanoseconds, and a
+      * commit time read back through Spark must still address its own
+      * commit. */
+    def snapshotIdAt(inst: Instant): Long = {
+      val at = inst.truncatedTo(ChronoUnit.MICROS)
+      val best = history.filter(e =>
+        !Instant.parse(e.committedAt).truncatedTo(ChronoUnit.MICROS).isAfter(at))
+        .map(_.snapshotId).foldLeft(-1L)(math.max)
+      require(best >= 1L, s"$name has no snapshot committed at or before $inst")
+      best
+    }
+
+    /** Oldest snapshot still time-travelable: physical rewrites fence
+      * at their OWN snapshot (earlier files are gone); expire entries
+      * carry an explicit fence value. */
+    def rewriteFloor: Long = history.map { e =>
+      if (e.operation == "rewrite") e.snapshotId
+      else if (e.operation == "expire") e.fence.getOrElse(0L)
+      else 0L
+    }.foldLeft(0L)(math.max)
+
+    /** The source timestamp column of the hidden day partitioning
+      * (None for unpartitioned / CTAS tables), recovered from the
+      * sidecar's `graft_days_<ts>` physical column. */
+    def partitionTs: Option[String] = schema.toSeq.flatMap(_.fieldNames)
       .find(_.startsWith(graft.plans.HiddenPartitionPruning.Prefix))
       .map(_.stripPrefix(graft.plans.HiddenPartitionPruning.Prefix))
 
-  /** True iff a snapshot-log line carries `"batch_id":batchId` — the
-    * idempotence check behind [[LakeCatalog.appendExactlyOnce]] (a
-    * replayed foreachBatch epoch is a no-op). Pure metadata-file pass
-    * over the KB-scale log. */
-  def batchApplied(warehouseDir: String, name: String,
-      batchId: Long): Boolean = {
-    val p = snapshotLogPath(warehouseDir, name)
-    Files.exists(p) && {
-      val re = (""""batch_id":""" + batchId + """[,}\s]""").r
-      val lines = Files.lines(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        lines.iterator().asScala.exists(l => re.findFirstIn(l).isDefined)
-      } finally lines.close()
+    /** The children both read surfaces scan, sorted: Spark's listing
+      * rule ([[graft.Tables.listed]]) minus `commit=N` dirs with no log
+      * line (the log line is an append's commit point). A table left
+      * mid-rewrite by [[LakeCatalog.deleteWhere]] is refused: between
+      * retire and promote one commit dir is missing, and a read would
+      * silently drop its rows. */
+    lazy val readable: Seq[String] = {
+      val names = childNames(dir)
+      val residue = names.filter(n => n.startsWith(".delete_tmp_") || n.startsWith(".delete_old_"))
+      if (residue.nonEmpty) throw new IllegalStateException(
+        s"$name has an unrecovered interrupted rewrite (${residue.sorted.mkString(", ")}); " +
+          "run LakeCatalog.recoverDeletes on the writing side before reading")
+      val logged = history.map(_.snapshotId).toSet
+      names.filter(n => graft.Tables.listed(n) && commitId(n).forall(logged)).sorted
     }
-  }
 
-  /** True iff `id` appears in the table's snapshot log — the
-    * existence check behind VERSION-AS-OF resolution (a digit string
-    * is only a snapshot id if the snapshot is real; otherwise it can
-    * still be a tag name). Pure metadata-file pass. */
-  def snapshotExists(warehouseDir: String, name: String, id: Long): Boolean = {
-    val p = snapshotLogPath(warehouseDir, name)
-    Files.exists(p) && {
-      val idRe = (""""snapshot_id":""" + id + """[,}\s]""").r
-      val lines = Files.lines(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        lines.iterator().asScala.exists(l => idRe.findFirstIn(l).isDefined)
-      } finally lines.close()
+    /** The served `commit=N` dirs as (N, dir name), in commit order. */
+    def commits: Seq[(Long, String)] =
+      readable.flatMap(n => commitId(n).map(_ -> n)).sortBy(_._1)
+
+    def hasHistory: Boolean = schema.fold(commits.nonEmpty)(_.fieldNames.contains(CommitCol))
+
+    def requireHistory(): Unit = require(hasHistory,
+      s"$name has no commit history (CTAS tables hold only their latest state)")
+
+    /** The guard of every read at or since a snapshot. */
+    def requireTravel(id: Long): Unit = {
+      requireHistory()
+      require(id >= rewriteFloor, s"$name snapshot $id predates the last compaction " +
+        s"(rewrite snapshot $rewriteFloor) — its files were folded away")
     }
-  }
 
-  /** Latest snapshot id committed at or before `inst` — the
-    * as-of-timestamp resolution, as a pure metadata-file pass (no
-    * Spark job; the facade's `snapshotIdAt` reads through its
-    * snapshots DataFrame, this serves the V2 source where no session
-    * frame exists yet). */
-  def snapshotIdAt(warehouseDir: String, name: String,
-      inst: java.time.Instant): Long = {
-    val p = snapshotLogPath(warehouseDir, name)
-    require(Files.exists(p), s"$name has no snapshot log")
-    val tsRe = """"committed_at":"([^"]+)"""".r
-    val idRe = """"snapshot_id":(\d+)""".r
-    val lines = Files.lines(p)
-    val best =
-      try {
-        import scala.jdk.CollectionConverters._
-        lines.iterator().asScala.flatMap { l =>
-          for {
-            t <- tsRe.findFirstMatchIn(l).map(_.group(1))
-            id <- idRe.findFirstMatchIn(l).map(_.group(1).toLong)
-            if !java.time.Instant.parse(t).isAfter(inst)
-          } yield id
-        }.foldLeft(-1L)(math.max)
-      } finally lines.close()
-    require(best >= 1L,
-      s"$name has no snapshot committed at or before $inst")
-    best
-  }
+    def saveSchema(s: StructType): Unit = writeAtomic(schemaPath, s.json)
 
-  /** Oldest snapshot still time-travelable: physical rewrites fence at
-    * their OWN snapshot (earlier files are gone); expire entries carry
-    * an explicit fence value. */
-  def rewriteFloor(warehouseDir: String, name: String): Long = {
-    val p = snapshotLogPath(warehouseDir, name)
-    if (!Files.exists(p)) return 0L
-    val idRe = """"snapshot_id":(\d+)""".r
-    val fenceRe = """"fence":(\d+)""".r
-    val lines = Files.lines(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      lines.iterator().asScala.flatMap { l =>
-        if (l.contains("\"operation\":\"rewrite\""))
-          idRe.findFirstMatchIn(l).map(_.group(1).toLong)
-        else if (l.contains("\"operation\":\"expire\""))
-          fenceRe.findFirstMatchIn(l).map(_.group(1).toLong)
-        else None
-      }.foldLeft(0L)(math.max)
-    } finally lines.close()
+    def saveTags(t: Map[String, Long]): Unit = writeAtomic(tagsPath,
+      t.map { case (k, v) => s""""${k.replace("\"", "")}":$v""" }.mkString("{", ",", "}"))
+
+    private var claimed = false
+
+    /** The next snapshot's commit dir, cleared of any unlogged dir a
+      * crash between rename and log line left there (never served). */
+    def nextCommit(): Path = {
+      val p = dir.resolve(s"$CommitCol=${currentSnapshotId + 1}")
+      deleteRecursive(p)
+      claimed = true
+      p
+    }
+
+    /** Append this operation's log line (the one writer of the log).
+      * An operation that claimed no commit dir drops an unlogged one at
+      * its id, so its line cannot make that dir visible. One line per
+      * resolved state. Returns the new snapshot id. */
+    def appendLog(op: String, rows: Long, batchId: Option[Long] = None,
+        fence: Option[Long] = None): Long = {
+      val id = currentSnapshotId + 1
+      if (!claimed) deleteRecursive(dir.resolve(s"$CommitCol=$id"))
+      Files.createDirectories(meta)
+      Files.write(logPath,
+        LogEntry(Instant.now().toString, id, op, rows, batchId, fence).line.getBytes("UTF-8"),
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      id
+    }
   }
 }

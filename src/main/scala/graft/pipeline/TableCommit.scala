@@ -1,13 +1,14 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import LakeMeta.deleteRecursive
 
 /** Crash-atomic table commit via GENERATION-POINTER INDIRECTION, shared
   * by the facade CTAS ([[LakeCatalog.createOrReplace]]) and the V2
   * staged CTAS/RTAS ([[graft.sources.GraftCatalog]]'s
-  * StagingTableCatalog commit) — ONE implementation of the publish so
-  * the two write surfaces can never drift (the same sharing discipline
-  * as [[LakeMeta]] on the read side).
+  * StagingTableCatalog commit): both write surfaces publish through
+  * this one implementation, and read the pointer and write the log
+  * through [[LakeMeta]], as every read does.
   *
   * Design (the Iceberg version-hint shape, emulated at directory
   * grain): a table directory is a CONTAINER —
@@ -61,7 +62,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * — are now structurally impossible to get WRONG: generations are
   * dot-prefixed, so a raw scan of the container sees no data at all
   * (loud empty-schema failure) instead of a torn mix; raw reads of a
-  * specific generation directory ([[LakeMeta.dataPath]]) remain valid
+  * specific generation directory ([[LakeMeta.TableState.dir]]) remain valid
   * and snapshot-isolated.
   *
   * 100 TB posture: the critical section is metadata-grain (one log
@@ -125,25 +126,15 @@ private[graft] object TableCommit {
     LakeMeta.GenPrefix +
       java.util.UUID.randomUUID().toString.replace("-", "")
 
-  private def pointerPath(c: Path): Path = c.resolve(LakeMeta.PointerName)
-
   private def retiredMarker(c: Path, gen: String): Path =
     c.resolve(LakeMeta.RetiredPrefix + gen)
-
-  /** Current generation name, or None for a table with no pointer
-    * (not yet created, or pre-generation legacy layout). */
-  def currentGen(c: Path): Option[String] = {
-    val p = pointerPath(c)
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), "UTF-8").trim)
-  }
 
   /** Atomic pointer publish for callers that assemble a complete
     * generation in place (e.g. [[LakeCatalog.cloneTable]]). */
   def publishPointer(c: Path, gen: String): Unit = writePointer(c, gen)
 
   private def writePointer(c: Path, gen: String): Unit = {
-    val p = pointerPath(c)
+    val p = c.resolve(LakeMeta.PointerName)
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp." +
       java.util.UUID.randomUUID().toString.replace("-", ""))
     Files.write(tmp, gen.getBytes("UTF-8"))
@@ -158,11 +149,11 @@ private[graft] object TableCommit {
     * this before touching data. */
   def ensureTable(warehouse: String, ns: String, table: String): Path = {
     val c = container(warehouse, ns, table)
-    currentGen(c) match {
+    LakeMeta.currentGen(c) match {
       case Some(g) => c.resolve(g)
       case None =>
         withCommitLock(warehouse) {
-          currentGen(c) match { // re-check under the lock
+          LakeMeta.currentGen(c) match { // re-check under the lock
             case Some(g) => c.resolve(g)
             case None =>
               Files.createDirectories(c)
@@ -238,37 +229,22 @@ private[graft] object TableCommit {
     withCommitLock(warehouse) {
       val c = container(warehouse, ns, table)
       Files.createDirectories(c)
-      val old = currentGen(c).orElse(
+      val old = LakeMeta.currentGen(c).orElse(
         migrateLegacyLocked(c).map(_.getFileName.toString))
       logEntry.foreach { case (op, rows) =>
-        val stagedMeta = stagedDir.resolve(LakeMeta.MetaDirName)
-        Files.createDirectories(stagedMeta)
-        val stagedLog = stagedMeta.resolve(LakeMeta.SnapshotLogName)
+        val staged = new LakeMeta.TableState(warehouse, s"$ns.$table", stagedDir)
+        Files.createDirectories(staged.meta)
         old.foreach { g =>
-          val curMeta = c.resolve(g).resolve(LakeMeta.MetaDirName)
-          val curLog = curMeta.resolve(LakeMeta.SnapshotLogName)
+          val cur = new LakeMeta.TableState(warehouse, s"$ns.$table", c.resolve(g))
           // fold the LIVE history (not a pre-staging copy): linear
           // even when a rival committed since this writer staged
-          if (Files.exists(curLog))
-            Files.copy(curLog, stagedLog,
+          if (Files.exists(cur.logPath))
+            Files.copy(cur.logPath, staged.logPath,
               StandardCopyOption.REPLACE_EXISTING)
-          val curTags = curMeta.resolve(LakeMeta.TagsName)
-          val stagedTags = stagedMeta.resolve(LakeMeta.TagsName)
-          if (Files.exists(curTags) && !Files.exists(stagedTags))
-            Files.copy(curTags, stagedTags)
+          if (Files.exists(cur.tagsPath) && !Files.exists(staged.tagsPath))
+            Files.copy(cur.tagsPath, staged.tagsPath)
         }
-        val id =
-          if (!Files.exists(stagedLog)) 1L
-          else {
-            val lines = Files.lines(stagedLog)
-            try lines.count() + 1 finally lines.close()
-          }
-        val ts = java.time.Instant.now().toString
-        Files.write(stagedLog,
-          (s"""{"committed_at":"$ts","snapshot_id":$id,""" +
-            s""""operation":"$op","added_records":$rows}""" + "\n")
-            .getBytes("UTF-8"),
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        staged.appendLog(op, rows)
       }
       crashHook("pre-publish")
       val gen = c.resolve(newGenName())
@@ -291,7 +267,7 @@ private[graft] object TableCommit {
     * directory mtime. */
   private def gcLocked(c: Path): Unit = {
     if (!Files.isDirectory(c)) return
-    val cur = currentGen(c)
+    val cur = LakeMeta.currentGen(c)
     val cutoff = System.currentTimeMillis() - retireGraceMs
     import scala.jdk.CollectionConverters._
     val entries = {
@@ -358,11 +334,4 @@ private[graft] object TableCommit {
     }
   }
 
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally st.close()
-    }
 }

@@ -201,7 +201,7 @@ object ThriftMultiProbe {
           // pointer-commit health: the raced table must have a pointer
           // naming an existing, complete generation (data + meta)
           val xpContainer = java.nio.file.Paths.get(wh, "raw", "race_xp")
-          val brokenPointer = !TableCommit.currentGen(xpContainer)
+          val brokenPointer = !LakeMeta.currentGen(xpContainer)
             .exists(g => java.nio.file.Files.isDirectory(
               xpContainer.resolve(g).resolve(
                 graft.pipeline.LakeMeta.MetaDirName)))

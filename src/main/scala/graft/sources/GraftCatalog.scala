@@ -11,6 +11,7 @@ import org.apache.spark.sql.types.{DateType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.pipeline.{LakeCatalog, LakeMeta}
+import graft.pipeline.LakeMeta.deleteRecursive
 
 /** `TableCatalog` + `SupportsNamespaces` plugin for LakeCatalog
   * warehouses — the reference's actual access pattern, where Spark is
@@ -115,7 +116,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def loadTable(ident: Identifier): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    GraftLakeSource.mkTable(warehouse, fullName(ident), None,
+    GraftLakeSource.mkTable(LakeMeta.resolve(warehouse, fullName(ident)), None,
       CaseInsensitiveStringMap.empty(), writable = true)
   }
 
@@ -129,14 +130,13 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * always target the current state). */
   override def loadTable(ident: Identifier, version: String): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val name = fullName(ident)
-    val sid: Long = scala.util.Try(version.toLong).toOption
-      .filter(id => id >= 1L && LakeMeta.snapshotExists(warehouse, name, id))
-      .orElse(LakeMeta.readTags(warehouse, name).get(version))
+    val st = LakeMeta.resolve(warehouse, fullName(ident))
+    val sid: Long = version.toLongOption
+      .filter(id => id >= 1L && st.snapshotExists(id))
+      .orElse(st.tags.get(version))
       .getOrElse(throw new IllegalArgumentException(
-        s"no snapshot or tag '$version' on $name"))
-    GraftLakeSource.mkTable(warehouse, name, Some(sid),
-      CaseInsensitiveStringMap.empty(), writable = false)
+        s"no snapshot or tag '$version' on ${st.name}"))
+    GraftLakeSource.mkTable(st, Some(sid), CaseInsensitiveStringMap.empty(), writable = false)
   }
 
   /** `TIMESTAMP AS OF ts` — Spark hands the timestamp in MICROSECONDS
@@ -145,11 +145,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * over the KB-scale snapshot log. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val name = fullName(ident)
-    val inst = java.time.Instant.ofEpochSecond(
-      timestamp / 1000000L, (timestamp % 1000000L) * 1000L)
-    GraftLakeSource.mkTable(warehouse, name,
-      Some(LakeMeta.snapshotIdAt(warehouse, name, inst)),
+    val st = LakeMeta.resolve(warehouse, fullName(ident))
+    val inst = java.time.Instant.EPOCH.plus(timestamp, java.time.temporal.ChronoUnit.MICROS)
+    GraftLakeSource.mkTable(st, Some(st.snapshotIdAt(inst)),
       CaseInsensitiveStringMap.empty(), writable = false)
   }
 
@@ -187,11 +185,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
         graft.plans.HiddenPartitionPruning.Prefix + ts, DateType)).toSeq
     // an empty first generation + pointer, schema sidecar inside it —
     // the declared schema commits as part of generation zero
-    graft.pipeline.TableCommit.ensureTable(warehouse,
-      ident.namespace.head, ident.name)
-    val p = LakeMeta.schemaPath(warehouse, name)
-    Files.createDirectories(p.getParent)
-    Files.write(p, StructType(data ++ hidden).json.getBytes("UTF-8"))
+    new LakeMeta.TableState(warehouse, name, graft.pipeline.TableCommit.ensureTable(
+      warehouse, ident.namespace.head, ident.name)).saveSchema(StructType(data ++ hidden))
     loadTable(ident)
   }
 
@@ -300,11 +295,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           StructField("snapshot_id", LongType)))) { in =>
           val t = in.getUTF8String(0).toString
           facade0.compact(t)
-          val sid = facade0.snapshots(t)
-            .agg(org.apache.spark.sql.functions.max(
-              org.apache.spark.sql.functions.col("snapshot_id")))
-            .head().getLong(0)
-          row(t, sid)
+          row(t, facade0.currentSnapshotId(t))
         }
       case other => throw new IllegalArgumentException(
         s"unknown procedure system.$other; available: " +
@@ -385,13 +376,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     deleteRecursive(Paths.get(warehouse, namespace.head))
     true
   }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally st.close()
-    }
 
   // ---- staged (atomic) CTAS / RTAS -----------------------------------
   //
@@ -481,7 +465,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
         case StageCreateOrReplace => ()
       }
       val tmpContainer = Paths.get(warehouse, tmp.namespace.head, tmp.name)
-      val gen = graft.pipeline.TableCommit.currentGen(tmpContainer)
+      val gen = LakeMeta.currentGen(tmpContainer)
         .getOrElse(throw new IllegalStateException(
           s"staging table ${tmp.name} has no committed generation"))
       graft.pipeline.TableCommit.commitGeneration(warehouse,

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -34,8 +33,9 @@ import graft.pipeline.LakeMeta
   *
   * Architecture — thin metadata resolution over Spark's own V2 parquet
   * scan (not a hand-rolled reader): the provider resolves the
-  * warehouse layout driver-side (sidecar schema, snapshot log, tags —
-  * via [[LakeMeta]], the SAME code the facade reads through), prunes
+  * warehouse layout driver-side (sidecar schema, snapshot log, tags,
+  * listing and time-travel guards — one [[LakeMeta.TableState]], the
+  * same resolved state the facade reads through), prunes
   * the `commit=N` partition directories for snapshot reads (file-level
   * pruning before planning, the manifest-prune analog), and then
   * delegates the actual scan to [[ParquetTable]] — so predicate
@@ -70,10 +70,6 @@ final class GraftLakeSource extends TableProvider with DataSourceRegister {
 
 private[graft] object GraftLakeSource {
 
-  private def hiddenCol(c: String): Boolean =
-    c == LakeMeta.CommitCol ||
-      c.startsWith(graft.plans.HiddenPartitionPruning.Prefix)
-
   /** Resolve (path, snapshot-id/tag options) → a wrapper Table whose
     * visible schema hides the physical partition columns and whose
     * scan covers exactly the selected commit directories. */
@@ -87,6 +83,7 @@ private[graft] object GraftLakeSource {
     // <warehouse>/<ns>/<table> — the layout contract of LakeMeta
     val warehouse = dir.getParent.getParent.toString
     val name = s"${dir.getParent.getFileName}.${dir.getFileName}"
+    val st = LakeMeta.resolve(warehouse, name)
 
     val snapshotId: Option[Long] =
       (Option(options.get("snapshot-id")), Option(options.get("tag")),
@@ -97,112 +94,58 @@ private[graft] object GraftLakeSource {
               "not both")
         case (Some(id), _, _) => Some(id.toLong)
         case (_, Some(t), _) =>
-          Some(LakeMeta.readTags(warehouse, name).getOrElse(t,
+          Some(st.tags.getOrElse(t,
             throw new IllegalArgumentException(s"no tag '$t' on $name")))
         case (_, _, Some(ts)) =>
           // epoch millis (the Iceberg read-option convention) or ISO-8601
           val inst = scala.util.Try(java.time.Instant.ofEpochMilli(ts.toLong))
             .getOrElse(java.time.Instant.parse(ts))
-          Some(LakeMeta.snapshotIdAt(warehouse, name, inst))
+          Some(st.snapshotIdAt(inst))
         case _ => None
       }
-    mkTable(warehouse, name, snapshotId, options, writable = false)
+    mkTable(st, snapshotId, options, writable = false)
   }
 
   /** Core table construction, shared by the path mount ([[resolve]])
-    * and the catalog plugin ([[GraftCatalog]]): commit-dir selection,
-    * sidecar schema resolution, hidden-column hiding, and the
-    * delegated [[ParquetTable]] scan. `writable = true` additionally
-    * advertises the V1 write capability (catalog loads only — the
-    * path mount stays read-only by design). */
-  def mkTable(warehouse: String, name: String, snapshotId: Option[Long],
+    * and the catalog plugin ([[GraftCatalog]]), over one resolved
+    * state: the served children (full read) or the logged commit dirs
+    * up to the snapshot (time travel — excluded commits are never even
+    * listed), each under the generation dir as `basePath`, the sidecar
+    * schema, hidden-column hiding, and the delegated [[ParquetTable]]
+    * scan. The state's listing refuses a table left mid-rewrite. A
+    * snapshot read is guarded like the facade's. `writable = true`
+    * additionally advertises the V1 write capability (catalog loads
+    * only — the path mount stays read-only by design). */
+  def mkTable(st: LakeMeta.TableState, snapshotId: Option[Long],
       options: CaseInsensitiveStringMap, writable: Boolean): GraftLakeTable = {
-    val spark = SparkSession.active
-    require(Files.isDirectory(
-      Paths.get(LakeMeta.tablePath(warehouse, name))),
-      s"no such table directory: ${LakeMeta.tablePath(warehouse, name)}")
-    // resolve the generation pointer ONCE: the scan reads exactly one
-    // complete generation, snapshot-isolated against concurrent
-    // commits (see TableCommit) — no rename window to observe
-    val dir = Paths.get(LakeMeta.dataPath(warehouse, name))
-      .toAbsolutePath.normalize()
-    require(Files.isDirectory(dir), s"no such table data directory: $dir")
-
-    // Refuse to serve a table left in a recoverable-but-unrecovered
-    // crash state: a deleteWhere/upsert/rollback interrupted between
-    // retire and promote leaves `.delete_tmp_*` / `.delete_old_*`
-    // protocol dirs, and a commit dir may be MISSING — a silent read
-    // here would drop that commit's rows, breaking parity with the
-    // facade (which rolls forward via recoverDeletes on entry). This
-    // surface cannot repair (the facade owns the write protocol), so
-    // it fails loudly instead of serving a partial table.
-    locally {
-      val stream = Files.list(dir)
-      val leftovers = try stream.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith(".delete_tmp_") ||
-          n.startsWith(".delete_old_"))
-        .toList
-      finally stream.close()
-      if (leftovers.nonEmpty) throw new IllegalStateException(
-        s"$name has an unrecovered interrupted rewrite " +
-          s"(${leftovers.sorted.mkString(", ")}); run " +
-          "LakeCatalog.recoverDeletes on the writing side before reading")
-    }
-
-    val commitDirs: Seq[(Long, String)] = {
-      val stream = Files.list(dir)
-      try stream.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(LakeMeta.CommitCol + "="))
-        .map(p => p.getFileName.toString
-          .substring(LakeMeta.CommitCol.length + 1).toLong -> p.toString)
-        .toSeq.sortBy(_._1)
-      finally stream.close()
-    }
-
-    val sidecar = LakeMeta.savedSchema(warehouse, name)
-    val (paths, schemaForInner) = snapshotId match {
-      case None =>
-        // full read: one root path; commit + day partition dirs are
-        // discovered underneath and split out as partition columns
-        (Seq(dir.toString), sidecar)
+    require(Files.isDirectory(st.dir), s"no such table data directory: ${st.dir}")
+    val paths = snapshotId match {
+      case None => st.readable
       case Some(id) =>
-        require(commitDirs.nonEmpty,
-          s"$name has no commit history (CTAS tables hold only their " +
-            "latest state)")
-        val floor = LakeMeta.rewriteFloor(warehouse, name)
-        require(id >= floor,
-          s"$name snapshot $id predates the last compaction " +
-            s"(rewrite snapshot $floor) — its files were folded away")
-        // manifest-prune analog: selected commit directories become
-        // the scan roots, so excluded commits are never even listed;
-        // basePath (set below) anchors partition discovery at the
-        // table root so `commit=N` still parses as a partition column.
-        (commitDirs.filter(_._1 <= id).map(_._2), sidecar)
+        st.requireTravel(id)
+        st.commits.filter(_._1 <= id).map(_._2)
     }
-
     val innerOptions = {
-      val m = new java.util.HashMap[String, String](
-        options.asCaseSensitiveMap())
-      if (snapshotId.isDefined) m.put("basePath", dir.toString)
+      val m = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
+      m.put("basePath", st.dir.toString)
       // No-sidecar fallback must merge footers like the facade's
-      // repair path (LakeCatalog.readTable) — plain inference on an
+      // repair path (LakeCatalog.read) — plain inference on an
       // add-column-evolved table would miss columns absent from the
       // sampled footer, making the two read paths surface different
       // schemas.
-      if (sidecar.isEmpty) m.put("mergeSchema", "true")
+      if (st.schema.isEmpty) m.put("mergeSchema", "true")
       new CaseInsensitiveStringMap(m)
     }
-    val inner = ParquetTable(s"graft:$name", spark,
-      innerOptions, paths, schemaForInner, classOf[ParquetFileFormat])
+    val inner = ParquetTable(s"graft:${st.name}", SparkSession.active, innerOptions,
+      paths.map(c => s"${st.dir}/$c"), st.schema, classOf[ParquetFileFormat])
     // Visible schema = data columns only. With a sidecar this is exact
     // (including add-column evolution order); without one (repair
     // path) it falls back to the inner table's merged-footer schema.
     val visible = StructType(
-      schemaForInner.getOrElse(inner.schema)
-        .fields.filterNot(f => hiddenCol(f.name)))
-    new GraftLakeTable(inner, visible, s"graft:$name",
-      if (writable) Some((warehouse, name)) else None)
+      st.schema.getOrElse(inner.schema).fields.filterNot(f => LakeMeta.hiddenCol(f.name)))
+    new GraftLakeTable(inner, visible, s"graft:${st.name}",
+      if (writable) Some((st.warehouse, st.name)) else None,
+      st.partitionTs.filter(_ => writable))
   }
 }
 
@@ -223,7 +166,7 @@ private[graft] object GraftLakeSource {
   * upsert. */
 private[graft] final class GraftLakeTable(
     inner: ParquetTable, visible: StructType, tableName: String,
-    writeTarget: Option[(String, String)] = None)
+    writeTarget: Option[(String, String)], partitionTs: Option[String])
   extends Table with SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -243,9 +186,9 @@ private[graft] final class GraftLakeTable(
     * CTAS tables (no commit dirs) expose no metadata columns. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    if (inner.schema.fieldNames.contains(graft.pipeline.LakeMeta.CommitCol))
+    if (inner.schema.fieldNames.contains(LakeMeta.CommitCol))
       Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = graft.pipeline.LakeMeta.CommitCol
+        override def name(): String = LakeMeta.CommitCol
         override def dataType(): org.apache.spark.sql.types.DataType =
           org.apache.spark.sql.types.LongType
         override def isNullable: Boolean = false
@@ -257,11 +200,8 @@ private[graft] final class GraftLakeTable(
   /** Report the hidden day-partitioning as its logical `days(ts)`
     * transform (the Iceberg DESCRIBE shape): derived from the sidecar's
     * `graft_days_<ts>` physical column. */
-  override def partitioning(): Array[Transform] =
-    writeTarget.toArray.flatMap { case (wh, nm) =>
-      graft.pipeline.LakeMeta.partitionTsOf(wh, nm).map(ts =>
-        org.apache.spark.sql.connector.expressions.Expressions.days(ts))
-    }
+  override def partitioning(): Array[Transform] = partitionTs.toArray.map(ts =>
+    org.apache.spark.sql.connector.expressions.Expressions.days(ts))
 
   override def capabilities(): java.util.Set[TableCapability] =
     if (writeTarget.isDefined)
@@ -375,7 +315,7 @@ private[graft] final class GraftLakeWriteBuilder(
             new graft.pipeline.LakeCatalog(SparkSession.active, warehouse)
           if (truncate || overwriteFlag) facade.createOrReplace(name, data)
           else facade.append(name, data,
-            partitionTs = graft.pipeline.LakeMeta.partitionTsOf(warehouse, name)
+            partitionTs = LakeMeta.resolve(warehouse, name).partitionTs
               .filter(data.columns.contains))
         }
     }

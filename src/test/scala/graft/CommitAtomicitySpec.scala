@@ -34,7 +34,7 @@ class CommitAtomicitySpec extends AnyFunSuite {
     * Returns the distinct `gen` values actually served. */
   private def generation(cat: LakeCatalog, wh: String): Set[String] = {
     val df = cat.table("raw.t")
-    val sidecarCols = LakeMeta.savedSchema(wh, "raw.t").get.fieldNames.toSet
+    val sidecarCols = LakeMeta.resolve(wh, "raw.t").schema.get.fieldNames.toSet
     assert(df.columns.toSet.subsetOf(sidecarCols),
       s"read columns ${df.columns.toSeq} not covered by sidecar $sidecarCols")
     assert(cat.snapshots("raw.t").count() >= 1L, "snapshot log unreadable")
@@ -292,7 +292,7 @@ class CommitAtomicitySpec extends AnyFunSuite {
     Files.createDirectories(c2.resolve(gname))
     cat.append("raw.u", Seq((3L, "fresh")).toDF("id", "gen"))
     assert(!Files.exists(c2.resolve("_migrate")))
-    assert(TableCommit.currentGen(c2) === Some(gname))
+    assert(LakeMeta.currentGen(c2) === Some(gname))
     assert(cat.table("raw.u").count() === 3L)
   }
 
@@ -314,6 +314,9 @@ class CommitAtomicitySpec extends AnyFunSuite {
     val orphan = Paths.get(cat.dataPath("raw.t"), "commit=2")
     Seq((99L, "stale"), (98L, "stale")).toDF("id", "v")
       .write.parquet(orphan.toString)
+    // the log line is the commit point: neither surface serves the orphan
+    assert(cat.table("raw.t").count() === 1L)
+    assert(spark.read.format("graft").load(cat.tablePath("raw.t")).count() === 1L)
     // the retry for epoch 1 must replace the orphan, not merge with it
     assert(cat.appendExactlyOnce("raw.t",
       Seq((2L, "y")).toDF("id", "v"), batchId = 1L))
@@ -346,7 +349,7 @@ class CommitAtomicitySpec extends AnyFunSuite {
       "reader fails loudly instead of reading a torn mix); raw DATA " +
       "PATH scans work; clone copies (not hard-links) the log") {
     val (cat, wh) = freshTable()
-    assert(Files.exists(LakeMeta.snapshotLogPath(wh, "raw.t")))
+    assert(Files.exists(LakeMeta.resolve(wh, "raw.t").logPath))
     // raw scan of the pointer-resolved data path: fine, meta skipped
     val direct = spark.read.parquet(LakeMeta.dataPath(wh, "raw.t"))
     assert(direct.count() === 2L)

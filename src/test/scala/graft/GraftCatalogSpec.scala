@@ -92,7 +92,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
     // TIMESTAMP AS OF at snapshot 3's commit instant (from the log)
     val log = java.nio.file.Files.readAllLines(
-      graft.pipeline.LakeMeta.snapshotLogPath(wh, "raw.bitcoin_prices"))
+      graft.pipeline.LakeMeta.resolve(wh, "raw.bitcoin_prices").logPath)
     val ts3 = """"committed_at":"([^"]+)"""".r
       .findFirstMatchIn(log.get(2)).get.group(1)
     // micros truncate the log's nanosecond commit instant — step 1 ms
@@ -164,14 +164,14 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE $cat.raw.mart RENAME TO raw.mart2")
     assert(spark.table(s"$cat.raw.mart2").count() === before)
     assert(java.nio.file.Files.exists(
-      graft.pipeline.LakeMeta.schemaPath(wh, "raw.mart2")))
+      graft.pipeline.LakeMeta.resolve(wh, "raw.mart2").schemaPath))
     val e2 = intercept[Exception] { spark.sql(s"DROP NAMESPACE $cat.raw") }
     assert(e2.getMessage.contains("SCHEMA_NOT_EMPTY")
       || e2.getMessage.toLowerCase.contains("contains objects"))
     spark.sql(s"DROP TABLE $cat.raw.mart2")
     assert(!spark.catalog.tableExists(s"$cat.raw.mart2"))
     assert(!java.nio.file.Files.exists(
-      graft.pipeline.LakeMeta.schemaPath(wh, "raw.mart2")))
+      graft.pipeline.LakeMeta.resolve(wh, "raw.mart2").schemaPath))
   }
 
   test("catalog CREATE TABLE + first append lands commit=1 with the " +
@@ -351,7 +351,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     f2.append("ns.t", Seq((1L, "a")).toDF("id", "name"))
     f2.append("ns.t", Seq((2L, "b", 7.5)).toDF("id", "name", "score"))
     java.nio.file.Files.delete(
-      graft.pipeline.LakeMeta.schemaPath(whl, "ns.t"))
+      graft.pipeline.LakeMeta.resolve(whl, "ns.t").schemaPath)
     val cols = spark.read.format("graft").load(s"$whl/ns/t").columns.toSeq
     assert(cols.contains("score") && cols.contains("id"),
       s"merged-footer fallback lost columns: $cols")

@@ -102,7 +102,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
   test("as-of-timestamp resolves against the snapshot log " +
       "(ISO and epoch-millis forms)") {
     val log = java.nio.file.Files.readAllLines(
-      graft.pipeline.LakeMeta.snapshotLogPath(wh, "probe.t"))
+      graft.pipeline.LakeMeta.resolve(wh, "probe.t").logPath)
     val line2 = log.get(1) // snapshot 2's commit record
     val ts2 = """"committed_at":"([^"]+)"""".r
       .findFirstMatchIn(line2).get.group(1)

@@ -288,6 +288,10 @@ class LakeCatalogSpec extends AnyFunSuite {
     // retire exactly as deleteWhere would
     val retired = Files.move(commit1.toPath, old1.toPath)
     assert(!commit1.exists() && retired.toFile.exists())
+    // a read here would silently drop commit 1's rows: refused, naming
+    // the recovery, exactly as the V2 surfaces refuse it
+    val refused = intercept[IllegalStateException](cat.table("raw.c"))
+    assert(refused.getMessage.contains("recoverDeletes"), refused.getMessage)
     cat.recoverDeletes("raw.c")
     assert(commit1.exists() && !old1.exists() && !tmp1.exists())
     assert(names() === Set("bob", "carol"))
@@ -535,5 +539,43 @@ class LakeCatalogSpec extends AnyFunSuite {
     // re-clone is idempotent: dst is rebuilt from the source state
     cat.cloneTable("raw.src", "raw.dst")
     assert(cat.table("raw.dst").count() === 3L)
+  }
+
+  test("every log-writing operation writes the fixed line format, and each line round-trips") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val wh = TestSpark.tempDir("graft-log-golden")
+    val cat = new LakeCatalog(spark, wh)
+    cat.createNamespace("raw")
+    cat.append("raw.g", Seq((1L, "a"), (2L, "b")).toDF("uid", "name"))
+    assert(cat.appendExactlyOnce("raw.g", Seq((3L, "c")).toDF("uid", "name"), batchId = 7L))
+    assert(cat.writeAuditPublish("raw.g", Seq((4L, "d")).toDF("uid", "name"), Nil) === Right(3L))
+    cat.append("raw.g", Seq((5L, "e")).toDF("uid", "name"))
+    assert(cat.rollbackTo("raw.g", 3L) === 1L)
+    assert(cat.expireSnapshots("raw.g", 2L) === 2L)
+    assert(cat.deleteWhere("raw.g", col("uid") === 1L) === 1L)
+    cat.compact("raw.g")
+    cat.createOrReplace("raw.r", Seq((1L, "x"), (2L, "y")).toDF("id", "s"))
+    cat.overwritePartitions("raw.p", Seq((1L, "d1"), (2L, "d2")).toDF("n", "day"), "day")
+    def lines(name: String) = Files.readAllLines(Paths.get(cat.dataPath(name),
+      LakeMeta.MetaDirName, LakeMeta.SnapshotLogName)).asScala.toSeq
+    val got = Seq("raw.g", "raw.r", "raw.p").flatMap(lines)
+    // each line round-trips through the one parser, byte for byte
+    got.foreach(l => assert(LakeMeta.LogEntry.parse(l).line === l + "\n", l))
+    got.foreach(l => java.time.Instant.parse(LakeMeta.LogEntry.parse(l).committedAt))
+    val at = """"committed_at":"[^"]+"""".r
+    assert(got.map(at.replaceAllIn(_, "\"committed_at\":\"T\"")) === Seq(
+      """{"committed_at":"T","snapshot_id":1,"operation":"append","added_records":2}""",
+      """{"committed_at":"T","snapshot_id":2,"operation":"append","added_records":1,"batch_id":7}""",
+      """{"committed_at":"T","snapshot_id":3,"operation":"append_wap","added_records":1}""",
+      """{"committed_at":"T","snapshot_id":4,"operation":"append","added_records":1}""",
+      """{"committed_at":"T","snapshot_id":5,"operation":"rollback","added_records":-1}""",
+      """{"committed_at":"T","snapshot_id":6,"operation":"expire","added_records":0,"fence":2}""",
+      """{"committed_at":"T","snapshot_id":7,"operation":"rewrite","added_records":1}""",
+      """{"committed_at":"T","snapshot_id":8,"operation":"rewrite","added_records":3}""",
+      """{"committed_at":"T","snapshot_id":1,"operation":"replace","added_records":2}""",
+      """{"committed_at":"T","snapshot_id":1,"operation":"overwrite_partitions","added_records":2}"""))
+    assert(TestSpark.collectSet[Long](cat.table("raw.g").select("uid"), "uid") === Set(2L, 3L, 4L))
   }
 }

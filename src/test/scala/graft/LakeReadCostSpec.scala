@@ -128,11 +128,17 @@ class LakeReadCostSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     appender.start()
     logger.addAppender(appender)
     try LogScope.withLevel(logger.getName, Level.WARN) {
-      val cat = new LakeCatalog(spark, TestSpark.tempDir("graft-nowarn"))
+      val wh = TestSpark.tempDir("graft-nowarn")
+      val cat = new LakeCatalog(spark, wh)
       (0 until 3).foreach(i => Ingest.run(spark, cat, PriceSource.fixtures, i.toLong, ts(24 * i)))
       Transform.run(spark, cat)
       assert(cat.table(Ingest.RawTable).count() === 9L)
       assert(cat.table(Transform.FctTable).count() === 9L)
+      // the V2 surfaces read the same listed children: catalog and path mount
+      spark.conf.set("spark.sql.catalog.graft_nowarn", "graft.sources.GraftCatalog")
+      spark.conf.set("spark.sql.catalog.graft_nowarn.warehouse", wh)
+      assert(spark.table(s"graft_nowarn.${Transform.FctTable}").count() === 9L)
+      assert(spark.read.format("graft").load(cat.tablePath(Ingest.RawTable)).count() === 9L)
       // the snapshot filter still prunes commit dirs at the scan
       val asOf = cat.tableAsOf(Ingest.RawTable, 2L)
       assert(asOf.count() === 6L)
@@ -181,5 +187,39 @@ class LakeReadCostSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally server.stop()
     assert(yarnKeys(spark.sessionState.newHadoopConf()) === 0)
     assert(yarnKeys(spark.sparkContext.hadoopConfiguration) === 0)
+  }
+
+  test("facade snapshotIdAt reads the log with no job and resolves like the V2 surfaces") {
+    val wh = TestSpark.tempDir("graft-asof")
+    val cat = new LakeCatalog(spark, wh)
+    (0 until 3).foreach(i => Ingest.run(spark, cat, PriceSource.fixtures, i.toLong, ts(i)))
+    spark.conf.set("spark.sql.catalog.graft_asof", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_asof.warehouse", wh)
+    val path = cat.tablePath(Ingest.RawTable)
+    val logged = cat.snapshots(Ingest.RawTable).collect()
+      .map(r => r.getAs[Long]("snapshot_id"))
+    val commits = LakeMeta.resolve(wh, Ingest.RawTable).history
+    assert(logged.toSeq === commits.map(_.snapshotId) && commits.size === 3)
+    commits.foreach { e =>
+      val inst = java.time.Instant.parse(e.committedAt)
+      // the commit's own instant, and that instant as Spark holds it
+      // (microseconds), both address the commit itself
+      Seq(inst, inst.truncatedTo(java.time.temporal.ChronoUnit.MICROS)).foreach { at =>
+        var sid = 0L
+        assert(jobsOf { sid = cat.snapshotIdAt(Ingest.RawTable, at) } === 0)
+        assert(sid === e.snapshotId)
+        val rows = 3L * sid
+        assert(cat.tableAsOf(Ingest.RawTable, sid).count() === rows)
+        assert(spark.read.format("graft").option("as-of-timestamp", at.toString)
+          .load(path).count() === rows)
+        assert(spark.sql(s"SELECT * FROM graft_asof.${Ingest.RawTable} " +
+          s"TIMESTAMP AS OF '$at'").count() === rows)
+      }
+    }
+    val before = java.time.Instant.parse("2000-01-01T00:00:00Z")
+    val facade = intercept[IllegalArgumentException](cat.snapshotIdAt(Ingest.RawTable, before))
+    val v2 = intercept[IllegalArgumentException](spark.read.format("graft")
+      .option("as-of-timestamp", before.toString).load(path))
+    assert(facade.getMessage === v2.getMessage)
   }
 }

@@ -27,6 +27,10 @@ Checks, in order:
      every conf the engine needs (extensions, UTC, non-ANSI, artifact
      isolation off, heartbeat/network timeouts, NioLocalFileSystem);
      a hand-built session silently drifts from it.
+  7. One snapshot-log codec: no `"snapshot_id":` literal under src/main
+     outside pipeline/LakeMeta.scala. `LakeMeta.LogEntry` is the one
+     formatter and parser of the lake's snapshot log; a second
+     hand-written line format or regex scanner drifts from it.
 
 Usage: python3 tools/close_check.py [verify_out_dir]
 Exit 0 = all green; prints a receipt line per check.
@@ -228,5 +232,24 @@ if builders:
 else:
     print("PASS session-factory: sessions under src/main are built only by "
           "graft.Sessions.build")
+
+# 7. the snapshot log is formatted and parsed only in LakeMeta
+LAKE_META = "src/main/scala/graft/pipeline/LakeMeta.scala"
+log_literals = []
+for f in sorted(glob.glob(os.path.join(REPO, "src/main/scala/**/*.scala"),
+                          recursive=True)):
+    rel = os.path.relpath(f, REPO)
+    if rel == LAKE_META:
+        continue
+    text = open(f).read()
+    log_literals += [f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+                     for m in re.finditer(r'"snapshot_id":', text)]
+if log_literals:
+    print(f"FAIL lake-log-format: snapshot-log literal outside LakeMeta.scala "
+          f"(format and parse lines with LakeMeta.LogEntry): {log_literals}")
+    fail = 1
+else:
+    print("PASS lake-log-format: the snapshot log is formatted and parsed only "
+          "in LakeMeta.scala")
 
 sys.exit(fail)
