@@ -36,11 +36,13 @@ import org.apache.spark.sql.{GraftSql, SparkSession}
   *  - file listing stays on the driver. Past
   *    `parallelPartitionDiscovery.threshold` (32) root paths or
   *    subdirectories Spark lists with a job of one task per directory,
-  *    so a raw table's read turned into a 33-task job at its 33rd
+  *    which turned a raw table's read into a 33-task job at its 33rd
   *    hourly commit (318 ms of job time and 775 ms of task
   *    deserialization, traced on a 4-core VM). In `local[N]` such a job
   *    reads the same disk from the same JVM and only adds a conf
-  *    deserialization per task;
+  *    deserialization per task. Lake reads no longer list through
+  *    Spark at all (they plan from `pipeline.LakeMeta.TableState`'s own
+  *    listing), so the threshold now serves non-lake reads only;
   *  - the Hadoop conf carries no `yarn-default.xml` entries. This
   *    engine never starts a YARN client, but those 520 entries were
   *    half of the 1,103-entry conf (113 KB serialized, 8.9 ms to

@@ -84,11 +84,12 @@ object Tables {
     else Some(Paths.get(uri.getPath).toAbsolutePath.normalize)
   }
 
-  /** Spark's own listing rule (`InMemoryFileIndex.shouldFilterOutPathName`):
-    * hidden and `_` entries are skipped, except partition dirs and the
-    * parquet summary files. */
+  /** Spark's own listing rule (`HadoopFSUtils.shouldFilterOutPathName`):
+    * hidden and `_` entries and files still being copied (`._COPYING_`)
+    * are skipped, except partition dirs and the parquet summary files. */
   private[graft] def listed(name: String): Boolean =
-    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) ||
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) ||
       name.startsWith("_metadata") || name.startsWith("_common_metadata")
 
   /** A flat file is its own single entry (relative name ""). */

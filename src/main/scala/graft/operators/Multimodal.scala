@@ -276,18 +276,20 @@ object Multimodal {
   // the hash match. All kernels are map-side after the scan — content
   // bytes never shuffle, exactly like the stub path.
   //
-  // r15 perf: ImageIO's default stream cache is FILE-backed — every
-  // read/write of these KB-scale payloads created and deleted a temp
-  // file. Memory-backed cache streams produce the identical bytes
-  // (executor-wide, thread-safe registry flag; set once at class
-  // load of this object, which every media kernel closure references).
-  // NOTE (r16 ADVICE): this is a JVM-GLOBAL ImageIO mutation — any
-  // other ImageIO user sharing the executor JVM also gets memory-backed
-  // streams. For this engine (one library, one JVM) that is the intent;
-  // embedders co-hosting other ImageIO workloads should scope codec
-  // streams per-call (MemoryCacheImageInput/OutputStream) instead.
+  // ImageIO's default stream cache is FILE-backed: every read/write of
+  // these KB-scale payloads would create and delete a temp file. Each
+  // codec call below wraps its bytes in a memory-cache stream of its
+  // own instead (the stream ImageIO picks with its cache off, so the
+  // bytes are identical), and no JVM-global ImageIO setting changes.
   // ---------------------------------------------------------------
-  javax.imageio.ImageIO.setUseCache(false)
+
+  /** `img` as PNG bytes, through a memory-backed output stream. */
+  private def encodePng(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try javax.imageio.ImageIO.write(img, "png", out) finally out.close()
+    bos.toByteArray
+  }
 
   /** The documented pixel generator: channel values of pixel (x, y)
     * of image `id`. Small coprime multipliers make every channel, row
@@ -329,9 +331,7 @@ object Multimodal {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    encodePng(img)
   }
 
   def pngImageTable(s: SparkSession, dir: String): DataFrame = {
@@ -345,8 +345,11 @@ object Multimodal {
   }
 
   private def decodePng(content: Array[Byte]): java.awt.image.BufferedImage = {
-    val img = javax.imageio.ImageIO.read(
+    val in = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(content))
+    // ImageIO closes the stream once it has found a reader
+    val img = javax.imageio.ImageIO.read(in)
+    if (img == null) in.close()
     require(img != null, "content is not a decodable image")
     img
   }
@@ -497,9 +500,7 @@ object Multimodal {
             }
             y += 1
           }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(dst, "png", bos)
-          val back = decodePng(bos.toByteArray)
+          val back = decodePng(encodePng(dst))
           var (sr, sg, sb) = (0L, 0L, 0L)
           y = 0
           while (y < dh) {
@@ -926,9 +927,7 @@ object Multimodal {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    encodePng(img)
   }
 
   private[graft] def be32(v: Int): Array[Byte] = Array(

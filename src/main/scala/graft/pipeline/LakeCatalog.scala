@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -46,7 +46,10 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
 
   // Every operation resolves the table ONCE (LakeMeta.resolve: one
   // pointer read) and takes its data dir, listing, sidecars and log
-  // from that one generation — the same state the V2 surfaces read.
+  // from that one generation — the same state the V2 surfaces read. A
+  // read lists the state's files once (TableState.listing) and hands
+  // Spark that listing as its file index; a read of a few small files
+  // comes back as one partition (oneSplit).
   private[graft] def tablePath(name: String): String =
     LakeMeta.tablePath(warehouseDir, name)
 
@@ -229,49 +232,43 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     TableCommit.commitGeneration(warehouseDir, ns, t, tmp, logEntry = Some(("replace", rows)))
   }
 
-  /** Reads use the sidecar schema recorded at write time — no
-    * footer-merge job per read. Add-column evolution still works:
-    * commits written before a column existed surface it as NULL (the
-    * parquet reader clips the requested schema per file). The
+  /** Reads plan from the state's own listing ([[TableState.relation]]:
+    * one `java.nio` walk, handed to Spark as its file index, so a read
+    * resolves no `DataSource`, globs and checks no path and lists no
+    * directory) with the sidecar schema recorded at write time, so no
+    * read pays a footer-merge job either. Add-column evolution still
+    * works: commits written before a column existed surface it as NULL
+    * (the parquet reader clips the requested schema per file). The
     * mergeSchema footer scan survives only as the REPAIR path for a
     * warehouse with no sidecar (e.g. produced by an older build); its
-    * result is then saved so the cost is paid at most once. */
-  private def read(st: TableState): DataFrame = oneSplit(st.schema match {
-    case Some(sc) => readData(spark.read.schema(sc), st)
-    case None =>
-      val df = readData(spark.read.option("mergeSchema", "true"), st)
-      st.saveSchema(df.schema)
-      df
-  })
-
-  /** Reads a data dir through its served children
-    * ([[TableState.readable]]), with the dir itself as `basePath`
-    * (partition discovery is unchanged). Handed the dir, Spark logs
-    * "All paths were ignored" for every read of a dot-prefixed
-    * generation. A dir with no listed child reads as empty, as the dir
-    * itself did; a missing dir fails as before. */
-  private def readData(r: DataFrameReader, st: TableState): DataFrame = {
-    val dir = st.dir.toString
-    if (!Files.isDirectory(st.dir)) r.parquet(dir)
-    else r.option("basePath", dir).parquet(st.readable.map(c => s"$dir/$c"): _*)
+    * result is then saved so the cost is paid at most once. A dir with
+    * no listed child reads as empty; a missing dir is refused. */
+  private def read(st: TableState): DataFrame = {
+    val rel = st.relation(spark)
+    if (st.schema.isEmpty) st.saveSchema(rel.schema)
+    oneSplit(spark.baseRelationToDataFrame(rel))
   }
 
-  /** A read of exactly one file that fits one split, as one partition.
-    * Spark already scans such a file with one task; `coalesce(1)`
-    * makes that `SinglePartition` visible to planning, so an aggregate
-    * or sort above the read needs no exchange. A file fits one split
-    * when it is no larger than both `maxPartitionBytes` and
-    * `openCostInBytes` (Spark's split size is never below the smaller
-    * of the two). Count and size come from the relation's already
-    * listed file index. */
+  /** A read of a few small files, as one partition. Spark gives each
+    * file of at most min(`maxPartitionBytes`, `openCostInBytes`) bytes a
+    * task of its own (a file's open cost alone fills a split); when 1 to
+    * `defaultParallelism` files hold at most that many bytes together,
+    * one task reads them all, and `coalesce(1)` makes that
+    * `SinglePartition` visible to planning, so an aggregate or sort
+    * above the read needs no exchange. More files than that (the raw
+    * table's hourly commits) keep a parallel scan. Count and size come
+    * from the relation's file index, which is already listed. */
   private def oneSplit(df: DataFrame): DataFrame = {
     val conf = spark.sessionState.conf
     val maxBytes = math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
-    val single = df.queryExecution.analyzed
+    val few = df.queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l.relation }
       .collect { case r: HadoopFsRelation => r.location }
-      .exists(index => index.inputFiles.length == 1 && index.sizeInBytes <= maxBytes)
-    if (single) df.coalesce(1) else df
+      .exists { index =>
+        val n = index.inputFiles.length
+        n >= 1 && n <= spark.sparkContext.defaultParallelism && index.sizeInBytes <= maxBytes
+      }
+    if (few) df.coalesce(1) else df
   }
 
   /** S5 — table scan by multi-part name. The physical partition
@@ -660,27 +657,16 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       StructField("record_count", LongType)))
     val conf = spark.sessionState.newHadoopConf()
     import scala.jdk.CollectionConverters._
-    val rows = st.readable.flatMap { c =>
-      val stream = Files.walk(st.dir.resolve(c))
-      try stream.iterator().asScala
-        .filter { f =>
-          val rel = st.dir.relativize(f).toString
-          f.getFileName.toString.endsWith(".parquet") &&
-            !rel.split('/').exists(seg =>
-              seg.startsWith(".") || seg.startsWith("_"))
-        }
-        .map { f =>
-          val segs = st.dir.relativize(f).toString.split('/').toSeq
-          def partVal(prefix: String): Option[String] = segs.collectFirst {
-            case seg if seg.startsWith(prefix) && seg.contains("=") =>
-              seg.substring(seg.indexOf('=') + 1)
-          }
-          org.apache.spark.sql.Row(segs.mkString("/"),
-            segs.flatMap(LakeMeta.commitId).headOption.getOrElse(0L),
-            partVal(graft.plans.HiddenPartitionPruning.Prefix).orNull,
-            Files.size(f), footerRowCount(f, conf))
-        }.toList
-      finally stream.close()
+    val rows = st.listing().flatMap(_._2).filter(_.rel.endsWith(".parquet")).map { f =>
+      val segs = f.rel.split('/').toSeq
+      def partVal(prefix: String): Option[String] = segs.collectFirst {
+        case seg if seg.startsWith(prefix) && seg.contains("=") =>
+          seg.substring(seg.indexOf('=') + 1)
+      }
+      org.apache.spark.sql.Row(f.rel,
+        segs.flatMap(LakeMeta.commitId).headOption.getOrElse(0L),
+        partVal(graft.plans.HiddenPartitionPruning.Prefix).orNull,
+        f.size, footerRowCount(st.dir.resolve(f.rel), conf))
     }
     spark.createDataFrame(rows.asJava, schema)
       .orderBy(col("commit"), col("file_path"))

@@ -1,10 +1,18 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.attribute.BasicFileAttributes
 import java.time.Instant
 import java.time.temporal.ChronoUnit
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{GraftSql, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Warehouse metadata for both lake read surfaces — [[LakeCatalog]] (the
   * in-process facade) and [[graft.sources.GraftLakeSource]] /
@@ -13,7 +21,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * read ([[currentGen]]), the one snapshot-log codec ([[LogEntry]]) and
   * [[TableState]], the resolved table state every facade and V2
   * operation reads through. Listing rules, time-travel guards and log
-  * queries exist once, here.
+  * queries exist once, here, and so does the hand-off to Spark: each
+  * state walks its served files once ([[TableState.listing]]) and both
+  * read surfaces plan from that listing ([[TableState.relation]] for
+  * the facade, [[TableState.parquetTable]] for V2), never through
+  * Spark's own path resolution and directory listing.
   *
   * Keyed by (warehouseDir, namespace.table) — the same signature shape
   * Iceberg's metadata layer has (catalog location + table identifier).
@@ -141,6 +153,48 @@ private[graft] object LakeMeta {
 
   private val TagRe = """"([^"]+)":(\d+)""".r
 
+  /** One served data file: its path under the generation dir, its size
+    * and its mtime in milliseconds (what a Hadoop listing reports). */
+  final case class DataFile(rel: String, size: Long, mtime: Long)
+
+  /** The files under `root` that Spark's listing would return, in its
+    * order: [[graft.Tables.listed]] applied at every path segment, the
+    * files of a directory before those of its subdirectories, entries
+    * in directory order. A file root is its own single entry. */
+  private def walk(dir: Path, root: Path): Vector[DataFile] = {
+    def file(p: Path, a: BasicFileAttributes) =
+      DataFile(dir.relativize(p).toString, a.size, a.lastModifiedTime.toMillis)
+    def under(d: Path): Vector[DataFile] = {
+      val st = Files.newDirectoryStream(d)
+      val entries = try st.asScala.toVector.filter(p => graft.Tables.listed(p.getFileName.toString))
+        .map(p => p -> Files.readAttributes(p, classOf[BasicFileAttributes]))
+        finally st.close()
+      val (dirs, files) = entries.partition(_._2.isDirectory)
+      files.collect { case (p, a) if a.isRegularFile => file(p, a) } ++
+        dirs.flatMap(e => under(e._1))
+    }
+    val a = Files.readAttributes(root, classOf[BasicFileAttributes])
+    if (a.isDirectory) under(root) else Vector(file(root, a))
+  }
+
+  /** A local path as Spark's listing qualifies it (`file:///…`). */
+  private def qualified(p: Path): HPath =
+    new HPath(p.toString).makeQualified(LocalFs, null)
+  private val LocalFs = java.net.URI.create("file:///")
+
+  /** The block size a Hadoop listing of a local file reports. */
+  private val LocalBlockSize = 32L * 1024 * 1024
+
+  /** The leaf files of each root path, handed to the file index that
+    * owns it: a listed root is never listed again by Spark. A `refresh()`
+    * of the index clears it, so a refreshed index lists from disk. */
+  private final class ListingCache(init: Map[HPath, Array[FileStatus]]) extends FileStatusCache {
+    private val leaves = new ConcurrentHashMap[HPath, Array[FileStatus]](init.asJava)
+    override def getLeafFiles(path: HPath): Option[Array[FileStatus]] = Option(leaves.get(path))
+    override def putLeafFiles(path: HPath, files: Array[FileStatus]): Unit = leaves.put(path, files)
+    override def invalidateAll(): Unit = leaves.clear()
+  }
+
   /** One generation of a table, as one operation sees it: the data dir
     * and its sidecars, each read at most once. The schema, tags, log
     * and listing are read lazily and kept; an operation that writes a
@@ -219,6 +273,72 @@ private[graft] object LakeMeta {
     /** The served `commit=N` dirs as (N, dir name), in commit order. */
     def commits: Seq[(Long, String)] =
       readable.flatMap(n => commitId(n).map(_ -> n)).sortBy(_._1)
+
+    /** The children a read at `snapshot` serves: every readable child,
+      * or (guarded by [[requireTravel]]) the commit dirs up to the
+      * snapshot, so excluded commits are never listed. A missing data
+      * dir is refused. */
+    def served(snapshot: Option[Long]): Seq[String] = {
+      require(Files.isDirectory(dir), s"no such table data directory: $dir")
+      snapshot match {
+        case None => readable
+        case Some(id) =>
+          requireTravel(id)
+          commits.filter(_._1 <= id).map(_._2)
+      }
+    }
+
+    private val listings = new ConcurrentHashMap[Option[Long], Seq[(String, Vector[DataFile])]]()
+
+    /** The served children with the data files under each: one
+      * `java.nio` walk per state and snapshot, the only listing a lake
+      * read does. */
+    def listing(snapshot: Option[Long] = None): Seq[(String, Vector[DataFile])] =
+      listings.computeIfAbsent(snapshot, _ => served(snapshot).map(c => c -> walk(dir, dir.resolve(c))))
+
+    /** Spark's file index over [[listing]], with the generation dir as
+      * `basePath` (partition values still come from the dir names, typed
+      * by the recorded schema). Its statuses come from a cache the index
+      * owns, so building it lists nothing; the same constructor serves
+      * Spark's own catalog tables (`CatalogFileIndex`). */
+    def fileIndex(spark: SparkSession, snapshot: Option[Long]): InMemoryFileIndex = {
+      val roots = listing(snapshot).map { case (c, files) =>
+        qualified(dir.resolve(c)) -> files.map(f => new FileStatus(f.size, false, 1,
+          LocalBlockSize, f.mtime, qualified(dir.resolve(f.rel)))).toArray
+      }
+      new InMemoryFileIndex(spark, roots.map(_._1), Map("basePath" -> dir.toString), schema,
+        new ListingCache(roots.toMap))
+    }
+
+    /** The facade's relation over the full listing: the recorded schema
+      * is the user schema. With no sidecar (the repair read) the data
+      * schema is merged from every footer, as `mergeSchema` does. */
+    def relation(spark: SparkSession): HadoopFsRelation = {
+      val index = fileIndex(spark, None)
+      val format = new ParquetFileFormat
+      val options = if (schema.isEmpty) Map("mergeSchema" -> "true") else Map.empty[String, String]
+      val parts = index.partitionSchema
+      val resolver = spark.sessionState.conf.resolver
+      val data = schema.map(s => StructType(s.filterNot(f => parts.exists(p => resolver(p.name, f.name)))))
+        .orElse(format.inferSchema(spark, options, index.allFiles()))
+        .getOrElse(throw new IllegalStateException(
+          s"$name has no schema sidecar and no data file to infer one from"))
+      HadoopFsRelation(index, parts, GraftSql.asNullable(data), None, format, options)(spark)
+    }
+
+    /** The V2 scan table: Spark's own [[ParquetTable]] (pushdown,
+      * pruning, vectorized decode) over the same index as the facade. */
+    def parquetTable(spark: SparkSession, snapshot: Option[Long],
+        options: CaseInsensitiveStringMap): ParquetTable = {
+      val opts = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
+      // no sidecar: merge every footer, like the facade's repair read
+      if (schema.isEmpty) opts.put("mergeSchema", "true")
+      val st = this
+      new ParquetTable(s"graft:$name", spark, new CaseInsensitiveStringMap(opts),
+          Seq(dir.toString), schema, classOf[ParquetFileFormat]) {
+        override lazy val fileIndex = st.fileIndex(spark, snapshot)
+      }
+    }
 
     def hasHistory: Boolean = schema.fold(commits.nonEmpty)(_.fieldNames.contains(CommitCol))
 

@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import Schemas._
 
@@ -20,6 +21,11 @@ import Schemas._
   */
 object Ingest {
   val RawTable = "raw.bitcoin_prices"
+
+  /** `BitcoinPrice`'s encoder, derived once: `spark.implicits` derives
+    * a product encoder by reflection on every `toDS()`, a fixed cost of
+    * each ingest batch. */
+  private lazy val rawEncoder: Encoder[BitcoinPrice] = ExpressionEncoder[BitcoinPrice]()
 
   /** Run one ingest batch; returns rows appended (0 = aborted). */
   def run(spark: SparkSession, catalog: LakeCatalog,
@@ -40,13 +46,12 @@ object Ingest {
       return 0L // py:174-177 — no write, no snapshot
     }
     catalog.createNamespace("raw")
-    import spark.implicits._
     // Dual schema declaration must agree (SURVEY §1.2): build typed,
     // then conform to the declared StructType with `to(schema)` —
     // column-level resolution that stays inside codegen (an
     // rdd-round-trip `createDataFrame(typed.rdd, schema)` would detour
     // through row serialization and break plan fusion).
-    val conformed = records.toDS().toDF().to(Schemas.rawSchema)
+    val conformed = spark.createDataset(records)(rawEncoder).toDF().to(Schemas.rawSchema)
     // A batch is ≤3 rows by construction (one per source, py:150-172);
     // one file per commit keeps the local-FS metadata churn (and at
     // scale, the small-file count) at its floor.

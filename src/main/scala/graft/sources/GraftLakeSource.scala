@@ -6,7 +6,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
@@ -108,36 +107,18 @@ private[graft] object GraftLakeSource {
 
   /** Core table construction, shared by the path mount ([[resolve]])
     * and the catalog plugin ([[GraftCatalog]]), over one resolved
-    * state: the served children (full read) or the logged commit dirs
-    * up to the snapshot (time travel — excluded commits are never even
-    * listed), each under the generation dir as `basePath`, the sidecar
-    * schema, hidden-column hiding, and the delegated [[ParquetTable]]
-    * scan. The state's listing refuses a table left mid-rewrite. A
-    * snapshot read is guarded like the facade's. `writable = true`
-    * additionally advertises the V1 write capability (catalog loads
-    * only — the path mount stays read-only by design). */
+    * state: its [[LakeMeta.TableState.parquetTable]] scans the state's
+    * own listing of the served children (full read) or of the logged
+    * commit dirs up to the snapshot (time travel, guarded like the
+    * facade's; excluded commits are never even listed), with the
+    * sidecar schema and hidden-column hiding. The listing refuses a
+    * table left mid-rewrite. `writable = true` additionally advertises
+    * the V1 write capability (catalog loads only — the path mount stays
+    * read-only by design). */
   def mkTable(st: LakeMeta.TableState, snapshotId: Option[Long],
       options: CaseInsensitiveStringMap, writable: Boolean): GraftLakeTable = {
-    require(Files.isDirectory(st.dir), s"no such table data directory: ${st.dir}")
-    val paths = snapshotId match {
-      case None => st.readable
-      case Some(id) =>
-        st.requireTravel(id)
-        st.commits.filter(_._1 <= id).map(_._2)
-    }
-    val innerOptions = {
-      val m = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
-      m.put("basePath", st.dir.toString)
-      // No-sidecar fallback must merge footers like the facade's
-      // repair path (LakeCatalog.read) — plain inference on an
-      // add-column-evolved table would miss columns absent from the
-      // sampled footer, making the two read paths surface different
-      // schemas.
-      if (st.schema.isEmpty) m.put("mergeSchema", "true")
-      new CaseInsensitiveStringMap(m)
-    }
-    val inner = ParquetTable(s"graft:${st.name}", SparkSession.active, innerOptions,
-      paths.map(c => s"${st.dir}/$c"), st.schema, classOf[ParquetFileFormat])
+    st.served(snapshotId) // refused here, not at the first scan
+    val inner = st.parquetTable(SparkSession.active, snapshotId, options)
     // Visible schema = data columns only. With a sidecar this is exact
     // (including add-column evolution order); without one (repair
     // path) it falls back to the inner table's merged-footer schema.

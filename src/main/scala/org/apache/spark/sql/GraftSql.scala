@@ -29,4 +29,9 @@ object GraftSql {
     * context's conf that every `sessionState.newHadoopConf()` copies. */
   def sharedHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sharedState.hadoopConf
+
+  /** `schema` with every field, nested ones too, nullable
+    * (`StructType.asNullable` is private[spark]): the data schema a file
+    * relation reads with, as `DataSource` hands it. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

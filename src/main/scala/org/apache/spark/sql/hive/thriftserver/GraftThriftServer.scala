@@ -55,10 +55,66 @@ object GraftThriftServer {
     serving
   }
 
+  /** Spark cancels a statement's job group when its operation closes
+    * (`SparkExecuteStatementOperation.cleanup`). By then the group's
+    * jobs have finished, so `DAGScheduler` logs "Failed to cancel job
+    * group <id>. Cannot find active jobs for it." once per statement:
+    * all but a few of the endpoint's WARN lines, burying a real one.
+    * This drops exactly that message for the statement groups the
+    * endpoint started (recorded from its operation-start events, each
+    * dropped with its one message); every other WARN, that message for
+    * any other group included, still logs. A group cancelled while its
+    * jobs run logs nothing and stays recorded until [[detach]]. */
+  private final class StatementCancelWarns extends org.apache.logging.log4j.core.filter.AbstractFilter(
+      org.apache.logging.log4j.core.Filter.Result.DENY,
+      org.apache.logging.log4j.core.Filter.Result.NEUTRAL) {
+    private val Logger = "org.apache.spark.scheduler.DAGScheduler"
+    private val (prefix, suffix) = ("Failed to cancel job group ", ". Cannot find active jobs for it.")
+    private val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+    val listener: org.apache.spark.scheduler.SparkListener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: ui.SparkListenerThriftServerOperationStart => groups.add(s.groupId)
+        case _ =>
+      }
+    }
+
+    override def filter(e: org.apache.logging.log4j.core.LogEvent): org.apache.logging.log4j.core.Filter.Result = {
+      val m = e.getMessage.getFormattedMessage
+      if (m.startsWith(prefix) && m.endsWith(suffix) &&
+          groups.remove(m.substring(prefix.length, m.length - suffix.length))) onMatch
+      else onMismatch
+    }
+
+    private def context = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+
+    /** On the scheduler logger's own config (created with an inherited
+      * level if it has none), so an appender added there sees no
+      * dropped event either. */
+    def attach(sc: org.apache.spark.SparkContext): Unit = {
+      sc.addSparkListener(listener)
+      val config = context.getConfiguration
+      if (config.getLoggerConfig(Logger).getName != Logger)
+        config.addLogger(Logger, new org.apache.logging.log4j.core.config.LoggerConfig(Logger, null, true))
+      this.start()
+      config.getLoggerConfig(Logger).addFilter(this)
+      context.updateLoggers()
+    }
+
+    def detach(sc: org.apache.spark.SparkContext): Unit = {
+      context.getConfiguration.getLoggerConfig(Logger).removeFilter(this)
+      context.updateLoggers()
+      sc.removeSparkListener(listener)
+      groups.clear()
+    }
+  }
+
   final class Handle private[thriftserver] (server: HiveThriftServer2,
       session: org.apache.spark.sql.classic.SparkSession,
       jvmDefaultTz: java.util.TimeZone,
-      confBefore: Map[String, String]) {
+      confBefore: Map[String, String],
+      cancelWarns: StatementCancelWarns) {
     /** Stops the server AND undoes its shared-session side effects.
       * In singleSession mode the server operates directly on the
       * owning session, and its startup/operation mutates session confs
@@ -79,6 +135,7 @@ object GraftThriftServer {
       val safe = awaitServing(server, 15000)
       try { if (safe) server.stop() }
       finally {
+        cancelWarns.detach(session.sparkContext)
         java.util.TimeZone.setDefault(jvmDefaultTz)
         val after = session.conf.getAll
         for ((k, v) <- confBefore if after.get(k) != Some(v))
@@ -145,8 +202,12 @@ object GraftThriftServer {
     // thrown as a ServiceException on the runner thread instead,
     // which is the right blast radius for an in-process endpoint.
     HiveThriftServer2.systemExitOnError.set(false)
-    val server = HiveThriftServer2.startWithContext(classic.sqlContext)
-    val handle = new Handle(server, classic, tz, confBefore)
+    val cancelWarns = new StatementCancelWarns
+    cancelWarns.attach(classic.sparkContext)
+    val server =
+      try HiveThriftServer2.startWithContext(classic.sqlContext)
+      catch { case e: Throwable => cancelWarns.detach(classic.sparkContext); throw e }
+    val handle = new Handle(server, classic, tz, confBefore, cancelWarns)
     // Wait for the serve() loop itself (awaitServing) — NOT a raw
     // socket connect, which succeeds from the moment the listening
     // socket is bound, strictly before serve() runs, and so cannot

@@ -20,10 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline._
 
-/** The fixed cost of a lake commit and read: listing stays on the
-  * driver past 32 commit dirs, the Hadoop conf carries no YARN
-  * defaults, one-split reads plan as one partition, and a read of a
-  * dot-prefixed generation logs no "All paths were ignored" WARN. */
+/** The fixed cost of a lake commit and read: a lake read lists no
+  * directory through Spark (at any listing threshold), the Hadoop conf
+  * carries no YARN defaults, a read of a few small files plans as one
+  * partition, and a read of a dot-prefixed generation logs no "All
+  * paths were ignored" WARN. */
 class LakeReadCostSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -63,14 +64,20 @@ class LakeReadCostSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("a 40-commit raw table read plus count() starts exactly one job") {
     val cat = new LakeCatalog(spark, TestSpark.tempDir("graft-lake40"))
     (0 until 40).foreach(i => Ingest.run(spark, cat, PriceSource.fixtures, i.toLong, ts(i)))
-    // the read lists its 40 commit dirs on the driver
-    assert(jobsOf(cat.table(Ingest.RawTable)) === 0)
-    // control: at Spark's default threshold (32) the read is a job
+    // the read plans from the table state's own listing: no job, even
+    // at Spark's default threshold (32), where a listing of 40 commit
+    // dirs is a job
     val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     val prev = spark.conf.get(threshold)
+    assert(jobsOf(cat.table(Ingest.RawTable)) === 0)
     spark.conf.set(threshold, "32")
-    try assert(jobsOf(cat.table(Ingest.RawTable)) === 1)
-    finally spark.conf.set(threshold, prev)
+    try {
+      assert(jobsOf(cat.table(Ingest.RawTable)) === 0)
+      // control: Spark's own listing of the same generation's children
+      val st = LakeMeta.resolve(cat.warehouse, Ingest.RawTable)
+      assert(jobsOf(spark.read.schema(st.schema.get).option("basePath", st.dir.toString)
+        .parquet(st.readable.map(c => s"${st.dir}/$c"): _*)) === 1)
+    } finally spark.conf.set(threshold, prev)
     // and the count is one job (AQE would run its shuffle stage as a
     // job of its own)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -81,11 +88,17 @@ class LakeReadCostSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("Checks.report over a one-file table plans no exchange; a multi-file table keeps them") {
+    // "multi-file" is more files than cores: a few small files (three
+    // here) also read as one partition
     val cat = new LakeCatalog(spark, TestSpark.tempDir("graft-onesplit"))
     cat.createNamespace("mart")
     val rows = (1 to 50).map(i => (i.toLong, s"k${i % 7}", i % 3 == 0))
+    val cores = spark.sparkContext.defaultParallelism
     cat.createOrReplace("mart.one", rows.toDF("id", "k", "flag").coalesce(1))
-    cat.createOrReplace("mart.many", rows.toDF("id", "k", "flag").repartition(3))
+    cat.createOrReplace("mart.three", rows.toDF("id", "k", "flag").repartition(3))
+    cat.createOrReplace("mart.many", rows.toDF("id", "k", "flag").repartition(cores + 1))
+    def files(t: String) = cat.table(t).inputFiles.length
+    assert((files("mart.one"), files("mart.three"), files("mart.many")) === ((1, 3, cores + 1)))
     def report(df: DataFrame) = Checks.report(
       df.withColumn("grain", concat_ws("|", col("k"), col("flag").cast("string"))),
       Seq(Checks.notNull("id"), Checks.nonNegative("id")), Seq("grain"))
@@ -99,6 +112,15 @@ class LakeReadCostSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(one.collect().toSeq === plain.collect().toSeq)
     assert(one.collect().map(_.getAs[Long]("n_violations")).toSeq === Seq(0L, 0L, 36L))
 
+    // three files: one task reads them all, and the report is the
+    // uncoalesced one
+    val three = report(cat.table("mart.three"))
+    assert(exchanges(three).isEmpty, three.queryExecution.executedPlan)
+    val threePlain = report(spark.read.parquet(cat.dataPath("mart.three")))
+    assert(exchanges(threePlain).nonEmpty)
+    assert(three.collect().toSeq === threePlain.collect().toSeq)
+    assert(three.collect().toSeq === one.collect().toSeq)
+
     // two distinct columns plan an Expand, whose output partitioning
     // is unknown: the exchanges above it stay
     val two = Checks.report(cat.table("mart.one"), Nil, Seq("k", "id"))
@@ -107,6 +129,14 @@ class LakeReadCostSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val many = report(cat.table("mart.many"))
     assert(exchanges(many).nonEmpty, many.queryExecution.executedPlan)
     assert(many.collect().toSeq === one.collect().toSeq)
+
+    // a table with no data file still reads 0 rows with its schema (an
+    // empty day-partitioned append writes no file)
+    cat.append("mart.none", Seq((1L, ts(1))).toDF("id", "at").filter(col("id") < 0),
+      partitionTs = Some("at"))
+    val none = cat.table("mart.none")
+    assert(none.inputFiles.isEmpty)
+    assert(none.columns.toSeq === Seq("id", "at") && none.count() === 0L)
   }
 
   test("snapshots sorts without an exchange and keeps commit order") {

@@ -108,6 +108,16 @@ class MultimodalSpec extends AnyFunSuite {
     assert(total === expected)
   }
 
+  test("media kernels leave ImageIO's JVM-global stream-cache setting as it was") {
+    val before = javax.imageio.ImageIO.getUseCache
+    // an encode (the table), a decode and a decode + re-encode kernel
+    assert(Multimodal.decodeImageStats(spark, dir).count() > 0)
+    assert(Multimodal.resizeDecodedPng(spark, dir, 4, 3).count() > 0)
+    assert(javax.imageio.ImageIO.getUseCache === before)
+    // nothing in the engine turns the JDK default off
+    assert(javax.imageio.ImageIO.getUseCache)
+  }
+
   test("pngImageTable: content is genuine PNG (magic bytes, ImageIO round-trip)") {
     val rows = Multimodal.pngImageTable(spark, dir).limit(10).collect()
     assert(rows.nonEmpty)

@@ -99,6 +99,57 @@ class SqlEndpointSpec extends AnyFunSuite {
     } finally graft.plans.TimeTravel.clear()
   }
 
+  test("closing a statement logs no failed-cancel WARN; other groups still do") {
+    val logger = org.apache.logging.log4j.LogManager.getLogger(
+      "org.apache.spark.scheduler.DAGScheduler")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-cancel-warns", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    def cancelWarns = warns.toArray.map(_.toString).filter(_.startsWith("Failed to cancel job group"))
+    val port = TestSpark.endpointPort
+    val server = graft.pipeline.SqlEndpoint.start(spark, port)
+    try {
+      logger.addAppender(appender)
+      LogScope.withLevel(logger.getName, org.apache.logging.log4j.Level.WARN) {
+        Class.forName("org.apache.hive.jdbc.HiveDriver")
+        var conn: java.sql.Connection = null
+        var attempts = 0
+        while (conn == null && attempts < 40) {
+          try conn = DriverManager.getConnection(
+            s"jdbc:hive2://localhost:$port/default", "anonymous", "")
+          catch { case _: Exception => attempts += 1; Thread.sleep(500) }
+        }
+        assert(conn != null, "could not connect to the thrift endpoint")
+        try (1 to 20).foreach { i =>
+          val st = conn.createStatement()
+          try {
+            val rs = st.executeQuery(s"SELECT COUNT(*) FROM range($i)")
+            assert(rs.next() && rs.getLong(1) === i.toLong)
+          } finally st.close()
+        } finally conn.close()
+        // control: a group that is no statement's, with no jobs, still
+        // warns; the scheduler handles cancels in order, so once this
+        // WARN is in, every statement's cancel has been handled
+        val group = s"graft-no-statement-${System.nanoTime}"
+        spark.sparkContext.cancelJobGroup(group)
+        val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+        while (!cancelWarns.exists(_.contains(group)) && System.nanoTime < deadline)
+          Thread.sleep(20)
+        assert(cancelWarns.toSeq ===
+          Seq(s"Failed to cancel job group $group. Cannot find active jobs for it."))
+      }
+    } finally {
+      logger.removeAppender(appender)
+      server.stop()
+    }
+  }
+
   test("multi-session mode isolates per-connection temp views (forked JVM)") {
     // singleSession is static and this JVM's session is built with it
     // true, so the isolation mode runs in a forked JVM (MultiSessionProbe)

@@ -31,6 +31,12 @@ Checks, in order:
      outside pipeline/LakeMeta.scala. `LakeMeta.LogEntry` is the one
      formatter and parser of the lake's snapshot log; a second
      hand-written line format or regex scanner drifts from it.
+  8. One lake listing: no `"basePath"` literal and no `ParquetTable(`
+     under src/main outside pipeline/LakeMeta.scala. Both lake read
+     surfaces plan from `LakeMeta.TableState`'s own file listing (its
+     `relation` for the facade, its `parquetTable` for V2); a read
+     handed paths under a `basePath` goes back through Spark's path
+     resolution and directory listing.
 
 Usage: python3 tools/close_check.py [verify_out_dir]
 Exit 0 = all green; prints a receipt line per check.
@@ -251,5 +257,24 @@ if log_literals:
 else:
     print("PASS lake-log-format: the snapshot log is formatted and parsed only "
           "in LakeMeta.scala")
+
+# 8. lake reads plan from the table state's own listing, in LakeMeta
+listing_sites = []
+for f in sorted(glob.glob(os.path.join(REPO, "src/main/scala/**/*.scala"),
+                          recursive=True)):
+    rel = os.path.relpath(f, REPO)
+    if rel == LAKE_META:
+        continue
+    text = open(f).read()
+    listing_sites += [f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+                      for m in re.finditer(r'"basePath"|\bParquetTable\(', text)]
+if listing_sites:
+    print(f"FAIL lake-listing: a basePath read or a ParquetTable outside "
+          f"LakeMeta.scala (plan lake reads from TableState.relation / "
+          f"parquetTable): {listing_sites}")
+    fail = 1
+else:
+    print("PASS lake-listing: lake reads plan only from LakeMeta's table-state "
+          "listing")
 
 sys.exit(fail)
